@@ -250,14 +250,17 @@ def connected_components(
     # materializing action — a lazy checkpoint plus one sum() job per
     # round replaces eager-checkpoint + sum() (2 jobs of fixed
     # scheduling cost down to 1; the sum scans every partition, so the
-    # checkpoint is complete exactly as under eager).
+    # checkpoint is complete exactly as under eager).  Decimal
+    # accumulation, as in connected_components_star: ANSI mode raises
+    # ARITHMETIC_OVERFLOW on a LongType sum once Σ labels passes 2^63.
     labels = (
         quotient.groupBy(F.col("s").alias("node"))
         .agg(F.min("d").alias("mind"))
         .select("node", F.least("node", "mind").alias("component"))
         .localCheckpoint(eager=False)
     )
-    prev_sum = labels.agg(F.sum("component")).collect()[0][0]
+    label_sum = F.sum(F.col("component").cast("decimal(38,0)"))
+    prev_sum = labels.agg(label_sum).collect()[0][0]
     converged = False
     for _ in range(max_iter):
         neighbor_labels = (
@@ -271,7 +274,7 @@ def connected_components(
             .agg(F.min("component").alias("component"))
             .localCheckpoint(eager=False)
         )
-        new_sum = labels.agg(F.sum("component")).collect()[0][0]
+        new_sum = labels.agg(label_sum).collect()[0][0]
         if new_sum == prev_sum:
             converged = True
             break

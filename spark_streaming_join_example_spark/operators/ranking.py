@@ -43,7 +43,10 @@ from pyspark.sql import Column, DataFrame, Window
 
 def _resolve_partitions(df: DataFrame, num_partitions: int | None) -> int:
     """Validate an explicit partition count, or fall back to the
-    session's shuffle parallelism.  Some deployments set
+    session's batch shuffle width: AQE's
+    ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``, then
+    ``spark.sql.shuffle.partitions`` (which ``get_spark`` sizes for
+    streaming state, not batch shuffles).  Some deployments set
     ``spark.sql.shuffle.partitions`` to a non-numeric value (e.g.
     ``auto``); rather than raising an opaque ``ValueError`` from
     ``int()``, fall back to the session's ``defaultParallelism``."""
@@ -53,7 +56,10 @@ def _resolve_partitions(df: DataFrame, num_partitions: int | None) -> int:
                 f"num_partitions must be a positive int, got {num_partitions!r}"
             )
         return num_partitions
-    raw = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    conf = df.sparkSession.conf
+    raw = conf.get(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum", None
+    ) or conf.get("spark.sql.shuffle.partitions", "32")
     try:
         n = int(raw)
     except (TypeError, ValueError):

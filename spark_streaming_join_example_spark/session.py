@@ -14,10 +14,24 @@ Scale notes (100 TB design, SURVEY.md §7 step 6):
 - AQE on: runtime shuffle-partition coalescing + skew-join splitting.
   ``events.user_id`` is zipf-ish; at cluster scale AQE splits the hot
   keys without manual salting.
-- ``spark.sql.shuffle.partitions`` defaults to 2× local cores here; on
-  a 1000-executor cluster you would set it (or let AQE's
-  ``initialPartitionNum``) to ~2-3× total cores. It is frozen into a
-  streaming checkpoint at first run — pick before going to prod.
+- Two shuffle widths, the two numbers Spark already separates:
+  - batch: ``spark.sql.adaptive.coalescePartitions.initialPartitionNum``
+    (``get_spark``'s ``shuffle_partitions``, else ``SPARK_GRAFT_SHUFFLE``,
+    else 32).  Every AQE batch shuffle starts this wide and AQE
+    coalesces it down at runtime; on a 1000-executor cluster set it to
+    ~2-3× total cores.
+  - state: ``spark.sql.shuffle.partitions`` = the session's
+    ``sparkContext.defaultParallelism`` (N for ``local[N]``, the
+    executor core count on a cluster).  AQE is off for stateful
+    streams, so this is the number of state-store shards — each
+    committed on EVERY micro-batch (4 stores per shard for a
+    stream-stream join) — and one wave of tasks per batch.  Only
+    stateful streams and non-AQE plans read it.
+- The state width freezes into a streaming checkpoint at first start;
+  a restart keeps the checkpoint's count whatever the session says.
+  Under dynamic allocation ``defaultParallelism`` is whatever cores
+  are up at session start, so set ``spark.default.parallelism`` to the
+  intended steady-state core count before a stream's first start.
 - Broadcast threshold raised to 64 MiB: every TPC-H-style dimension
   (region/nation/supplier/customer at these SFs) broadcast-joins, which
   removes the shuffle on the fact side entirely.
@@ -84,10 +98,12 @@ def get_spark(
 ) -> SparkSession:
     """Create (or reuse) the engine's SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default all cores);
-    ``SPARK_GRAFT_SHUFFLE`` the shuffle partition count (default 32 —
-    sized so sf0.1 partitions stay ~10-50 MB; at 100 TB you'd scale this
-    to ~2-3× total executor cores and let AQE coalesce).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default all cores).
+    ``shuffle_partitions`` / ``SPARK_GRAFT_SHUFFLE`` is the BATCH shuffle
+    width, AQE's initial partition number (default 32 — sized so sf0.1
+    partitions stay ~10-50 MB; at 100 TB you'd scale this to ~2-3×
+    total executor cores and let AQE coalesce).  Stateful streams get
+    ``defaultParallelism`` shards instead (module docstring).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -96,7 +112,10 @@ def get_spark(
         shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE", "32")
 
     builder = SparkSession.builder.appName(app_name).master(master)
-    builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    builder = builder.config(
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
+        str(shuffle_partitions),
+    )
     for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     # Executor Python workers must import this package: cloudpickle
@@ -125,4 +144,10 @@ def get_spark(
     # driver's process env)
     builder = builder.config("spark.executorEnv.PYTHONPATH", joined)
     spark = builder.getOrCreate()
+    # the state width needs the live context's core count, so it is set
+    # after getOrCreate (a runtime SQL conf)
+    spark.conf.set(
+        "spark.sql.shuffle.partitions",
+        str(spark.sparkContext.defaultParallelism),
+    )
     return ensure_runtime_confs(spark)

@@ -10,9 +10,12 @@ State-at-scale notes:
 - every stateful op here is watermark-bounded: join state is evicted
   once the watermark passes the range bound; windowed agg state once
   it passes window end; dedup state via dropDuplicatesWithinWatermark;
-- state keys partition by `spark.sql.shuffle.partitions`, which is
-  frozen into the checkpoint at first run — size it for the target
-  cluster BEFORE launch (T5 footgun);
+- state keys partition by `spark.sql.shuffle.partitions`, which
+  `get_spark` sets to the session's `defaultParallelism` (batch
+  shuffles start from AQE's `initialPartitionNum` instead).  The count
+  is frozen into the checkpoint at first run — size the cluster, or
+  under dynamic allocation `spark.default.parallelism`, BEFORE launch
+  (T5 footgun);
 - for 100 TB streams use the RocksDB state store provider
   (`spark.sql.streaming.stateStore.providerClass`) so state spills
   beyond heap.

@@ -175,6 +175,26 @@ def test_connected_components_quotient_paths(spark):
     assert got == {5: 5, 6: 5, 7: 5, 8: 5, 9: 5, 20: 20, 21: 20, 22: 20}
 
 
+def test_connected_components_label_sum_does_not_overflow(spark):
+    """The convergence probe sums every quotient label.  Ids near 2^62
+    push that sum past the LongType range after two labels, which ANSI
+    mode turns into ARITHMETIC_OVERFLOW unless the sum is decimal."""
+    from spark_streaming_join_example_spark.operators.graph import (
+        connected_components,
+    )
+
+    base = 2**62
+    # a 5-chain: the init round leaves 3+ label classes, so the quotient
+    # loop (and its sum probe) runs
+    chain = spark.createDataFrame(
+        [(base + i, base + i + 1) for i in range(4)], "a_id long, b_id long"
+    )
+    got = {
+        r.node: r.component for r in connected_components(chain).collect()
+    }
+    assert got == {base + i: base for i in range(5)}
+
+
 def test_connected_components_strict_raises_on_nonconvergence(spark):
     """r12 advisor fix: with strict=True, exhausting max_iter raises
     ConvergenceError instead of emitting a warning a pipeline never

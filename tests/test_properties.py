@@ -388,28 +388,35 @@ def test_kcore_distinct_half_path_matches_generic(spark, edges, k):
 
 @given(
     vals=st.lists(st.integers(0, 9), min_size=1, max_size=60),
+    num_partitions=st.sampled_from([4, None]),
 )
 @settings(max_examples=8, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
-def test_global_row_number_matches_single_sort(spark, vals):
+def test_global_row_number_matches_single_sort(spark, vals, num_partitions):
     """operators.ranking.global_row_number ≡ single-partition
     row_number under a total order, on duplicate-heavy data at a
     forced multi-partition layout (ties MUST NOT straddle-break:
-    the unique id tie-break makes the order total)."""
+    the unique id tie-break makes the order total).  With no explicit
+    count the kernel takes the session's batch shuffle width."""
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
     from spark_streaming_join_example_spark.operators.ranking import (
+        _resolve_partitions,
         global_row_number,
     )
 
     df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(vals)], schema="id long, v long"
     ).repartition(5)
+    if num_partitions is None:
+        # the test session's batch width (shuffle_partitions=8), not
+        # its streaming state width (defaultParallelism of local[4])
+        assert _resolve_partitions(df, None) == 8
     got = {
         (r.id, r.rn)
         for r in global_row_number(
-            df, [F.col("v").desc(), F.col("id")], num_partitions=4
+            df, [F.col("v").desc(), F.col("id")], num_partitions=num_partitions
         ).collect()
     }
     want = {

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -1250,9 +1251,14 @@ def test_state_store_reader_exposes_watermark_frontier(spark, sf_dir, tmp_path):
     meta = md.collect()
     assert len(meta) == 1
     assert meta[0].operatorName == "stateStoreSave"
-    assert meta[0].numPartitions == int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    # state is sharded to the session's cores (local[4]), not to the
+    # batch shuffle width...
+    assert meta[0].numPartitions == spark.sparkContext.defaultParallelism
+    # ...which batch aggregations still start from (shuffle_partitions=8)
+    from .test_plans import plan_of
+
+    plan = plan_of(batch.groupBy("event_type").count())
+    assert re.search(r"hashpartitioning\(event_type#\d+, 8\)", plan), plan
 
 
 def test_ewma_with_state_matches_batch(spark, sf_dir, replay_dir, tmp_path):

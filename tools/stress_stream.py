@@ -47,7 +47,6 @@ def probe(
     sf_dir: str,
     n_chunks: int = 8,
     modes: tuple[str, ...] = ("batched", "chunked"),
-    shuffle_partitions: int | None = 8,
 ) -> dict:
     """Run the five core streaming jobs over the chunked events fixture
     and return ``{"rows": N, "n_chunks": K, "shuffle": S, "jobs":
@@ -57,17 +56,10 @@ def probe(
     the per-round artifact (batched mode only there, to bound bench
     wall-clock); the CLI below runs both modes.
 
-    ``shuffle_partitions`` sizes the streaming queries' state sharding
-    (default 8 since r9): stateful operators pay a per-partition state
-    store load/commit EVERY micro-batch — the stream-stream join keeps
-    4 stores per partition — so at this fixture's state volume (100 k
-    rows) 32 partitions is pure fixed overhead (measured r9 A/B,
-    tools/ab_ssjoin.py: ss_join drain 36.3 s at 32 → 8.9 s at 8 →
-    6.4 s at 4; RocksDB strictly worse at every count at this state
-    size).  At 100 TB you size partitions to state volume per the T5
-    discipline — and the count FREEZES into the checkpoint at first
-    start, so each probe drain uses a fresh checkpoint dir.  Pass
-    ``None`` to keep the session's current setting."""
+    State is sharded by the session's ``spark.sql.shuffle.partitions``,
+    which ``get_spark`` sets to ``defaultParallelism`` (reported as
+    ``shuffle``).  The count FREEZES into the checkpoint at first
+    start, so each probe drain uses a fresh checkpoint dir."""
     work = tempfile.mkdtemp(prefix="stress_stream_")
     replay = os.path.join(work, "replay")
     chunk_events(spark, sf_dir, replay, n_chunks=n_chunks)
@@ -106,9 +98,6 @@ def probe(
         q.awaitTermination()
         return time.perf_counter() - t0
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if shuffle_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     out: dict[str, dict] = {}
     try:
         for job in (j_enrich, j_ss_join, j_tumbling, j_dedup, j_temporal):
@@ -121,12 +110,11 @@ def probe(
                     "rows_per_s": int(n_rows / s),
                 }
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
         shutil.rmtree(work, ignore_errors=True)
     return {
         "rows": n_rows,
         "n_chunks": n_chunks,
-        "shuffle": shuffle_partitions or int(prev_shuffle),
+        "shuffle": int(spark.conf.get("spark.sql.shuffle.partitions")),
         "jobs": out,
     }
 
