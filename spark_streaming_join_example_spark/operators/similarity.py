@@ -515,12 +515,14 @@ def _kmeans_l2(mat, kk: int, n_iter: int = 10, seed: int = 42):
     deterministic (seeded init, fixed iteration order); empty
     clusters keep their previous centroid, as before.
 
-    r16 (guide §1.2 — q_pq_topk's registered m=16 over d=16 makes
-    every subspace ONE-dimensional, and the N×K distance matrix was
-    ~100 % of the remaining training cost): 1-D subspaces route
-    through :func:`_assign_nearest_1d` (sorted centroids +
-    searchsorted), which returns bit-identical assignments — same
-    centroids out, measured ~15× faster per round."""
+    r16 (guide §1.2 — the N×K distance matrix is ~100 % of the
+    remaining training cost when subspaces are one-dimensional, i.e.
+    m == d): 1-D subspaces route through :func:`_assign_nearest_1d`
+    (sorted centroids + searchsorted), an exact-distance argmin whose
+    assignments measured identical to the matrix path, ~15× faster
+    per round.  q_pq_topk's registered shape (m=16 over d=64, 4 dims
+    per subspace) takes the matrix path; the 1-D path never runs
+    there."""
     import numpy as np
 
     rng = np.random.default_rng(seed)

@@ -32,6 +32,27 @@ Scale notes (100 TB design, SURVEY.md §7 step 6):
   Under dynamic allocation ``defaultParallelism`` is whatever cores
   are up at session start, so set ``spark.default.parallelism`` to the
   intended steady-state core count before a stream's first start.
+- Checkpoint files go through Hadoop's ``FileSystem`` API
+  (``spark.sql.streaming.checkpointFileManagerClass`` =
+  ``FileSystemBasedCheckpointFileManager``).  Spark's default,
+  ``FileContextBasedCheckpointFileManager``, resolves every path
+  through ``FileContext``; with no native libhadoop loaded each
+  resolve forks a ``readlink`` shell, and every state delta, offset
+  and commit log entry of every micro-batch resolves paths.  Both
+  managers write a temp file and rename it into place, so what a
+  reader sees is unchanged:
+  - local file system: both check that the destination is absent,
+    then rename;
+  - HDFS: ``FileSystem.rename`` never overwrites; when it returns
+    false over an existing destination the manager raises
+    ``SparkFileAlreadyExistsException`` itself;
+  - object stores (S3, GCS, ABFS): rename is not atomic under either
+    manager — point checkpoints at HDFS or a store-specific manager.
+  Checkpoint checksums (``spark.sql.streaming.checkpoint.fileChecksum
+  .enabled``) stay at their default, on: every state delta keeps its
+  ``<v>.delta.crc`` beside it.  What remains per created file is the
+  ``chmod`` fork of ``RawLocalFileSystem.setPermission`` and Hadoop's
+  own ``.crc`` sidecar.
 - Broadcast threshold raised to 64 MiB: every TPC-H-style dimension
   (region/nation/supplier/customer at these SFs) broadcast-joins, which
   removes the shuffle on the fact side entirely.
@@ -73,6 +94,13 @@ BUILD_CONFS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
     "spark.driver.memory": "8g",
+    # without native libhadoop Spark's FileContext default forks
+    # `readlink` per checkpoint path resolve; same temp-file + rename
+    # protocol and checksum files (module docstring)
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 

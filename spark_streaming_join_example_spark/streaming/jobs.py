@@ -16,6 +16,17 @@ State-at-scale notes:
   is frozen into the checkpoint at first run — size the cluster, or
   under dynamic allocation `spark.default.parallelism`, BEFORE launch
   (T5 footgun);
+- every micro-batch writes one delta per state store (4 per shard for
+  a stream-stream join), plus an offset and a commit log entry.
+  `get_spark` routes these through Hadoop's `FileSystem` API
+  (`FileSystemBasedCheckpointFileManager`): Spark's `FileContext`
+  default forks a `readlink` per path resolve when no native
+  libhadoop is loaded, and that put ~1.5 s of state commit (summed
+  over the state tasks) into every `stream_join` batch on a 4-core
+  box.  What remains per created file is a `chmod` fork
+  (`RawLocalFileSystem.setPermission`) and a Hadoop `.crc` sidecar:
+  16 forks per stateful join task per batch (4 stores × (delta +
+  checksum file) × (file + `.crc`));
 - for 100 TB streams use the RocksDB state store provider
   (`spark.sql.streaming.stateStore.providerClass`) so state spills
   beyond heap.

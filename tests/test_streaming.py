@@ -1260,6 +1260,18 @@ def test_state_store_reader_exposes_watermark_frontier(spark, sf_dir, tmp_path):
     plan = plan_of(batch.groupBy("event_type").count())
     assert re.search(r"hashpartitioning\(event_type#\d+, 8\)", plan), plan
 
+    # checkpoint files go through Hadoop's FileSystem API (no `readlink`
+    # fork per path resolve) and keep Spark's checkpoint checksums: every
+    # state delta has its `<v>.delta.crc` beside it
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    deltas = sorted((ckpt / "state").rglob("*.delta"))
+    assert deltas, "no state deltas written"
+    missing = [d for d in deltas if not d.with_name(d.name + ".crc").is_file()]
+    assert not missing, missing
+
 
 def test_ewma_with_state_matches_batch(spark, sf_dir, replay_dir, tmp_path):
     """T4: the stateful streaming EWMA (bounded last-K ring per user in
