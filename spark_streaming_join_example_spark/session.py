@@ -53,6 +53,36 @@ Scale notes (100 TB design, SURVEY.md §7 step 6):
   ``<v>.delta.crc`` beside it.  What remains per created file is the
   ``chmod`` fork of ``RawLocalFileSystem.setPermission`` and Hadoop's
   own ``.crc`` sidecar.
+- Generated-code cache: ``spark.sql.codegen.cache.maxEntries`` is
+  2000, up from Spark's 100.  One ``graph_dedup`` benchmark pass
+  (perfbench) uses about 290 distinct generated classes and one
+  ``batch_scaled`` pass about 62; with 100 entries the LRU evicted a
+  ``graph_dedup`` pass's own classes before they came round again, so
+  every pass recompiled about 288 of them in Janino on the driver.
+  Why 2000: it is about 7× the largest working set measured, so a
+  session that alternates the benchmark's workloads or a handful of
+  heavy queries keeps them all compiled, while the cap still bounds
+  memory — generated classes are a few KB of bytecode each, so a full
+  cache is tens of MB of the 8 GB driver.  (The registry-wide test
+  loops compile thousands of classes and still cycle it.)  Every
+  executor JVM keeps its own cache, so at 100 TB the cap is per
+  executor, and each executor compiles a class once per JVM, not once
+  per task.  It is a static conf: a session the engine did not build
+  keeps its own cap.
+- Persisted relations coalesce:
+  ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is on,
+  so AQE coalesces what ``persist()`` / ``cache()`` stores as it does
+  every other shuffle.  Spark's default keeps a cached plan's output
+  at the full batch width, so a persisted 7 MB relation stayed 32
+  partitions and every loop round over it ran 32 tasks
+  (``q_pagerank``: 652 of a ``graph_dedup`` pass's 955 tasks).  At
+  100 TB coalescing targets AQE's 64 MB advisory partition size, so a
+  large persisted relation keeps about one partition per 64 MB.  A
+  coalesced relation no longer advertises the batch width, so a
+  downstream join keyed the same way can need an extra shuffle to
+  repartition it; none appeared in ``graph_dedup`` (its jobs, stages
+  and shuffle MB all fell).  It is a runtime conf, so
+  ``ensure_runtime_confs`` sets it on foreign sessions too.
 - Broadcast threshold raised to 64 MiB: every TPC-H-style dimension
   (region/nation/supplier/customer at these SFs) broadcast-joins, which
   removes the shuffle on the fact side entirely.
@@ -64,7 +94,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-#: confs that are runtime-settable and REQUIRED for correctness.
+#: runtime-settable confs, also applied to sessions the engine did not
+#: build (``ensure_runtime_confs``).
 RUNTIME_CONFS: dict[str, str] = {
     # events.ts is INT64 TIMESTAMP(NANOS) parquet — illegal in Spark
     # without this; read as LongType then converted (sources/batch.py).
@@ -72,24 +103,20 @@ RUNTIME_CONFS: dict[str, str] = {
     # the DuckDB oracle returns naive UTC timestamps; pin the session
     # so collected datetimes agree bit-for-bit.
     "spark.sql.session.timeZone": "UTC",
+    # AQE coalesces persisted relations too (module docstring)
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
 }
 
 #: build-time confs (need a fresh session to change).
 BUILD_CONFS: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # r15: lowering spark.sql.adaptive.coalescePartitions.
-    # minPartitionSize from its 1 MB default to 128k was A/B'd
-    # (tools/ab_minpartsize.py — with parallelismFirst=true the
-    # post-shuffle target is max(totalBytes/parallelism,
-    # minPartitionSize), and the 1 MB floor caps fixture reduce
-    # stages at 2-6 tasks) and REJECTED: per-query signs FLIPPED
-    # across three alternating-session rounds (headline totals 0.88 /
-    # 0.98 / 0.95; q_rfm_segments 0.71 then 1.07/1.08;
-    # q_cross_doc_ngram_dup regressed 1.19-1.35 in two of three), so
-    # the true effect is below this box's steal noise with regression
-    # risk on the heavy tier.  Stock default kept.
+    # coalescePartitions.minPartitionSize stays at its 1 MB default:
+    # lowering it was A/B'd in r15 and rejected (ROADMAP, Closed list)
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # static conf; holds a graph_dedup pass's ~290 generated classes
+    # across passes (module docstring)
+    "spark.sql.codegen.cache.maxEntries": "2000",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",

@@ -12,6 +12,7 @@ import io
 
 import pytest
 
+from spark_streaming_join_example_spark import ensure_runtime_confs
 from spark_streaming_join_example_spark.plans.registry import queries_dict
 
 
@@ -309,6 +310,59 @@ def test_pagerank_persists_and_avoids_node_hints(spark, sf_dir, qd):
     assert "InMemory" in p
     df.collect()  # let AQE finalize the per-stage join strategies
     assert "BroadcastHashJoin" in plan_of(df, mode="simple")
+
+
+def test_persisted_aggregate_is_coalesced(spark):
+    """A persisted relation is coalesced by AQE like any other shuffle
+    (``canChangeCachedPlanOutputPartitioning``): Spark's default keeps
+    a cached plan's final stage at the full batch width (8 in this
+    session), so every later scan of a tiny persisted relation ran one
+    task per empty partition.  The conf is reset to Spark's default
+    first, so ``ensure_runtime_confs`` must restore it, as it does on a
+    session the engine did not build.  Each DataFrame is built fresh —
+    a persist of an already-executed DataFrame reuses its executed plan
+    and would hide the setting."""
+    import pyspark.sql.functions as F
+
+    spark.conf.unset("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning")
+    ensure_runtime_confs(spark)
+
+    def agg():
+        return (
+            spark.range(1000)
+            .selectExpr("id % 7 AS k", "id")
+            .groupBy("k")
+            .agg(F.sum("id").alias("s"))
+        )
+
+    expected = sorted(agg().collect())
+    persisted = agg().persist()
+    try:
+        persisted.count()
+        assert persisted.rdd.getNumPartitions() < 8
+        assert sorted(persisted.collect()) == expected
+    finally:
+        persisted.unpersist(blocking=True)
+
+
+def test_codegen_cache_holds_a_graph_pass_working_set(spark):
+    """Generated classes survive a working set the size of a
+    ``graph_dedup`` pass (~290 classes): after 300 distinct tiny plans
+    — each inlines its own literal, so each compiles its own classes
+    — re-running the first 10 compiles nothing.  With Spark's default
+    cache of 100 entries the LRU has evicted them and all 10
+    recompile."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(i):
+        spark.range(3).selectExpr(f"id * 3 + {7_300_000 + i} AS v").collect()
+
+    for i in range(300):
+        run(i)
+    compiled = metrics.METRIC_COMPILATION_TIME().getCount()
+    for i in range(10):
+        run(i)
+    assert metrics.METRIC_COMPILATION_TIME().getCount() == compiled
 
 
 def test_vector_kernels_build_without_driver_jobs(spark, sf_dir, qd):
