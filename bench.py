@@ -269,8 +269,7 @@ def main() -> None:
     # reported separately as graph_edge_build) and the kernels over the
     # cached relation, NO clearCache between their runs.  Everything
     # else keeps the clear-cache-per-run discipline.  Results are
-    # value-identical either way (the correctness driver runs with
-    # sharing OFF).
+    # value-identical either way (pytest-pinned).
     graph_shared = {
         "q_pagerank",
         "q_triangle_count",
@@ -305,67 +304,57 @@ def main() -> None:
     # (doc_id, toks) relation — measured at 54 % of q_minhash_neardup's
     # wall time at sf0.1 (tools/ab_minhash.py, r12).  Since r12 the
     # bench times them the deployment way, mirroring the graph tier:
-    # one shared localCheckpoint'd shingle build (cost reported as
-    # `shingle_build`), kernels timed over it, entries tagged
-    # "shared_shingles" in heavy_spread.  NOT comparable to r11-and-
-    # earlier numbers for these three names.  Correctness paths run
-    # with sharing OFF; results are pytest-pinned identical.
+    # one shared shingle build (cost reported as `shingle_build`),
+    # kernels timed over it, entries tagged "shared_shingles" in
+    # heavy_spread.  NOT comparable to r11-and-earlier numbers for
+    # these three names.
     shingle_shared = {
         "q_minhash_neardup",
         "q_prefix_shingle_join",
         "q_simhash_shingle_pairs",
     }
 
+    def time_shared(builder, names: list[str], tag: str) -> float | None:
+        """Persist one build, time the kernels over it, then end it:
+        Spark's CacheManager serves every kernel's re-built plan from
+        the persisted relation until clearCache()."""
+        if not names:
+            return None
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        builder(spark, sf_dir).persist().count()
+        build_s = round(time.perf_counter() - t0, 4)
+        for name in names:
+            time_heavy(name, clear_between=False)
+            heavy_spread[name] = heavy_spread[name] + [tag]
+        spark.catalog.clearCache()
+        return build_s
+
     for name in heavy_names:
         if name not in graph_shared and name not in shingle_shared:
             time_heavy(name, clear_between=True)
 
+    from spark_streaming_join_example_spark.operators.dedup import (
+        corpus_shingle_toks,
+    )
+    from spark_streaming_join_example_spark.plans.copurchase import (
+        copurchase_edges_undirected,
+    )
+
     shingle_names = [n for n in heavy_names if n in shingle_shared]
-    shingle_build = None
-    if shingle_names:
-        from spark_streaming_join_example_spark.operators import dedup
-
-        dedup._SHARED_TOKS_MEMO.clear()
-        os.environ["SPARK_GRAFT_SHARE_SHINGLES"] = "1"
-        try:
-            t0 = time.perf_counter()
-            toks = dedup.corpus_shingle_toks(spark, sf_dir)
-            toks.count()  # materialize the shared checkpoint once
-            shingle_build = round(time.perf_counter() - t0, 4)
-            for name in shingle_names:
-                time_heavy(name, clear_between=False)
-                heavy_spread[name] = heavy_spread[name] + ["shared_shingles"]
-        finally:
-            os.environ.pop("SPARK_GRAFT_SHARE_SHINGLES", None)
-            dedup._SHARED_TOKS_MEMO.clear()
-
+    shingle_build = time_shared(
+        corpus_shingle_toks, shingle_names, "shared_shingles"
+    )
+    # graph_edge_build is reported under its OWN top-level key, not as
+    # a pseudo-entry inside the per-query heavy map: it is a build
+    # step, not a query, and must not occupy a heavy_worst5 slot.
+    # Shared-mode kernels are tagged in heavy_spread (third element
+    # "shared_edges") so naive cross-round heavy diffs can't silently
+    # compare a pre-cached-edge number against a cold one (≤ r8).
     shared_names = [n for n in heavy_names if n in graph_shared]
-    graph_edge_build = None
-    if shared_names:
-        from spark_streaming_join_example_spark.plans import copurchase
-
-        spark.catalog.clearCache()
-        copurchase._MEMO.clear()
-        os.environ["SPARK_GRAFT_SHARE_EDGES"] = "1"
-        try:
-            t0 = time.perf_counter()
-            edges = copurchase.copurchase_edges(spark, sf_dir)
-            edges.count()  # materialize the shared persist once
-            # r10 advisor fix: reported under its OWN top-level key,
-            # not as a pseudo-entry inside the per-query heavy map —
-            # it is a build step, not a query, and must not occupy a
-            # heavy_worst5 slot.  Shared-mode kernels are tagged in
-            # heavy_spread (third element "shared_edges") so naive
-            # cross-round heavy diffs can't silently compare a
-            # pre-cached-edge number against a cold one (≤ r8).
-            graph_edge_build = round(time.perf_counter() - t0, 4)
-            for name in shared_names:
-                time_heavy(name, clear_between=False)
-                heavy_spread[name] = heavy_spread[name] + ["shared_edges"]
-        finally:
-            os.environ.pop("SPARK_GRAFT_SHARE_EDGES", None)
-            copurchase._MEMO.clear()
-    spark.catalog.clearCache()
+    graph_edge_build = time_shared(
+        copurchase_edges_undirected, shared_names, "shared_edges"
+    )
 
     value = round(sum(times.values()), 4)
     out = {

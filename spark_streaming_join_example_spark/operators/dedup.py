@@ -320,15 +320,6 @@ def lsh_candidate_pairs(
     )
 
 
-#: bench-session memo for the shared corpus shingle relation (see
-#: corpus_shingle_toks); keyed by (applicationId, sf_dir, shingle,
-#: id_col, text_col) — the session id keeps a restart from serving
-#: localCheckpoint'd frames bound to a dead context, and the column
-#: names keep a non-default caller from reusing a mismatched relation
-#: (r12 ADVICE).
-_SHARED_TOKS_MEMO: dict = {}
-
-
 def corpus_shingle_toks(
     spark,
     sf_dir: str,
@@ -342,17 +333,12 @@ def corpus_shingle_toks(
     time at sf0.1 (tools/ab_minhash.py, r12), so recomputing it per
     query is the heavy tier's single biggest redundancy.
 
-    With ``SPARK_GRAFT_SHARE_SHINGLES=1`` the relation is built ONCE
-    per (sf_dir, shingle), localCheckpoint'd eagerly and memoized —
-    the same deployment-shaped sharing discipline as the co-purchase
-    graph tier's ``SPARK_GRAFT_SHARE_EDGES`` (bench.py reports the
-    build separately as ``shingle_build`` and tags shared heavy
-    entries).  With the flag off (correctness paths: the driver,
-    verify_local, pytest) it returns the plain per-query plan —
-    results are pinned identical either way in
-    tests/test_extensions.py."""
-    import os
-
+    It always returns the plain plan.  To share one build, persist
+    this function's output: Spark's CacheManager then serves every
+    later re-build of the same plan from the ``InMemoryRelation``
+    until ``spark.catalog.clearCache()`` or ``unpersist()`` (bench.py
+    times that build as ``shingle_build``).  Results are pinned
+    identical either way in tests/test_extensions.py."""
     from ..sources.batch import load_table, scan_fanout
 
     # r15 (guide §2.5): the documents file is KBs on the fixtures, so
@@ -370,25 +356,7 @@ def corpus_shingle_toks(
         if shingle > 1
         else distinct_tokens(text_col)
     )
-    plain = docs.select(F.col(id_col), unit.alias("toks"))
-    if os.environ.get("SPARK_GRAFT_SHARE_SHINGLES") != "1":
-        return plain
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        shingle,
-        id_col,
-        text_col,
-        # r16 (ADVICE r15): the fan-out arm is part of the relation's
-        # identity — without it, toggling SPARK_GRAFT_NO_FANOUT
-        # mid-session would silently serve a memoized relation built
-        # under the OTHER arm (the A/B tools only worked because they
-        # cleared the memo by hand).
-        os.environ.get("SPARK_GRAFT_NO_FANOUT") == "1",
-    )
-    if key not in _SHARED_TOKS_MEMO:
-        _SHARED_TOKS_MEMO[key] = plain.localCheckpoint(eager=True)
-    return _SHARED_TOKS_MEMO[key]
+    return docs.select(F.col(id_col), unit.alias("toks"))
 
 
 def minhash_near_duplicates(

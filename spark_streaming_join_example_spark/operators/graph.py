@@ -333,17 +333,17 @@ def connected_components_star(
     practice), so the stars are stable and labels can be read off.
     Decimal accumulation sidesteps ANSI long-sum overflow.
     """
-    # r16 (guide §1.2): all_nodes has exactly ONE consumer — the final
-    # label join — so a lazy checkpoint defers its (identical) upstream
-    # pass into the caller's action instead of paying a separate eager
-    # job at setup.  e stays EAGER: round 1 unions e with its own flip
-    # in one job, and lazy would race both branches into recomputing
-    # the expensive upstream edge build concurrently.
+    # Both checkpoints are EAGER, so the returned labels depend only on
+    # the graph as it was during the call: a lazy all_nodes would
+    # re-read ``edges`` at the caller's action, after the source may
+    # have changed.  e is eager too because round 1 unions it with its
+    # own flip in one job, and lazy would race both branches into
+    # recomputing the expensive upstream edge build concurrently.
     all_nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
     e = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))

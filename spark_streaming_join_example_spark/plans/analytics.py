@@ -162,9 +162,9 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale rationale: each iteration is one shuffle of |edges| keyed by
     dst (partial-aggregable integer SUM) plus a broadcast-able
-    node/degree side; the co-order self-join that builds the edge list
-    is an equi-join on l_orderkey, never all-pairs.  The graph is
-    symmetric, so every node has outdeg ≥ 1 — no dangling-mass
+    node/degree side; the edge list is the shared co-purchase build
+    (plans/copurchase.py), keyed on l_orderkey, never all-pairs.  The
+    graph is symmetric, so every node has outdeg ≥ 1 — no dangling-mass
     redistribution term is needed (documented deviation from the
     full PageRank formulation).  Iteration count is fixed (2), so the
     whole computation is one declarative plan — no driver-side
@@ -182,42 +182,13 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins at web scale (the triangle-count discipline); edges stay the
     only edge-cardinality shuffle either way.
     """
-    from .copurchase import copurchase_edges, sharing_enabled
+    from .copurchase import copurchase_edges
 
-    if sharing_enabled():
-        # bench-scoped shared edge build (plans/copurchase.py): the
-        # graph trio reads one persisted relation; value-identical to
-        # the self-join below (both are distinct ordered part pairs
-        # sharing an order)
-        edges = copurchase_edges(spark, sf_dir).select(
-            F.col("u").alias("src"), F.col("v").alias("dst")
-        )
-    else:
-        # edge build stays in the self-join form HERE: the A/B at sf0.1
-        # showed the collect_set+explode build (operators/graph.py
-        # basket_pairs) regressing THIS query 4.2 s -> 6.4 s — the
-        # persist() materialization interacts badly with the exploded
-        # plan's partitioning, while bfs/kcore (which re-shuffle edges
-        # anyway) got 15-30% faster from it.  Measured, not assumed.
-        li = (
-            _t(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_partkey")
-            .distinct()
-        )
-        a, b = li.alias("a"), li.alias("b")
-        edges = (
-            a.join(
-                b,
-                (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") != F.col("b.l_partkey")),
-            )
-            .select(
-                F.col("a.l_partkey").alias("src"),
-                F.col("b.l_partkey").alias("dst"),
-            )
-            .distinct()
-            .persist()
-        )
+    edges = (
+        copurchase_edges(spark, sf_dir)
+        .select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        .persist()
+    )
     # r15 iteration restructure (guide §2.4, A/B'd in
     # tools/ab_pagerank.py): ONE persisted groupBy("src") yields the
     # degree table AND the node set (the graph is symmetric, so every
@@ -2075,7 +2046,6 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL to the literal query (pushed filter and all) — scripting
     adds control flow, not execution overhead.
     """
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_script")
     return spark.sql(
         """

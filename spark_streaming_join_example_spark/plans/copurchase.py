@@ -1,39 +1,24 @@
 """Shared co-purchase edge relation for the iterative graph kernels.
 
-q_pagerank, q_kcore and q_bfs_hops all run over the SAME graph —
-directed distinct part pairs sharing an order — yet each rebuilt it
-independently (~4 s of the ~4 s per-kernel cost at sf0.1 is the edge
-build).  In a real deployment the co-purchase edge list is a
-materialized table the kernels read, built once per ingest; this
-module gives the bench process that shape without changing what the
-driver's correctness harness measures.
-
-Sharing is OPT-IN via ``SPARK_GRAFT_SHARE_EDGES=1`` (bench.py sets it
-around the graph trio only): when on, the relation is persisted and
-memoized per (session, sf_dir), so the three kernels share one build;
-when off (the default — the correctness driver, verify_local, pytest),
-every query builds its own edges exactly as before.  Results are
-identical either way: the memo returns the same logical relation, and
-``basket_pairs``'s distinct directed (u, v) output is value-equal to
-the self-join form q_pagerank used (both are "distinct ordered pairs
-of distinct parts sharing an order").
+q_pagerank, q_kcore, q_bfs_hops, q_triangle_count and
+q_assortativity all run over the SAME graph — distinct part pairs
+sharing an order.  In a real deployment the co-purchase edge list is
+a materialized table the kernels read, built once per ingest.  The
+builders here always return the plain plan; a caller that wants the
+kernels to share one build persists ``copurchase_edges_undirected``'s
+output, and Spark's CacheManager then serves every later re-build of
+it (and of the directed mirror union) from the ``InMemoryRelation``
+until ``spark.catalog.clearCache()`` or ``unpersist()`` ends it.
+Results are identical either way (pytest-pinned).
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .. import load_table
 from ..operators.graph import basket_pairs
-
-_MEMO: dict = {}
-
-
-def sharing_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_SHARE_EDGES") == "1"
 
 
 def copurchase_edges_undirected(
@@ -45,19 +30,12 @@ def copurchase_edges_undirected(
     Consumers that are orientation-symmetric anyway (triangle
     counting's ``u < v`` orientation step, k-core's internal
     symmetrize) read this half directly and skip shuffling the
-    mirrored copies (r15, guide §2.3).  Memoized + persisted when
-    sharing is enabled — the cache holds HALF the rows it used to."""
-    key = (id(spark), os.path.abspath(sf_dir))
-    if sharing_enabled() and key in _MEMO:
-        return _MEMO[key]
+    mirrored copies (r15, guide §2.3).  This is the relation to
+    persist for a shared build: it holds HALF the directed rows."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
-    und = basket_pairs(li, "l_orderkey", "l_partkey", directed=False)
-    if sharing_enabled():
-        und = und.persist()
-        _MEMO[key] = und
-    return und
+    return basket_pairs(li, "l_orderkey", "l_partkey", directed=False)
 
 
 def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,8 +43,6 @@ def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sharing an order — the mirror union of the undirected half
     relation (value-identical to the pre-r15 directed build: both are
     "distinct ordered pairs of distinct parts sharing an order").
-    Memoized + persisted via the undirected half when sharing is
-    enabled (see module docstring); a plain per-call build otherwise.
     The mirror branch re-reads the half relation (persisted cache or
     ReusedExchange), so the directed relation still costs one
     half-sized dedup shuffle, not a full-sized one."""

@@ -417,45 +417,19 @@ def q_prefix_shingle_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (shingle-set Jaccard ≥ 0.9) but EXACT, with no per-pair miss rate:
     at 100 TB this is the path when dedup must be provably complete.
 
-    r12: under SPARK_GRAFT_SHARE_SHINGLES=1 (bench heavy tier) the
-    shingle relation is the shared session memo FILTERED to this
-    query's doc_id < 2000 slice — per-row shingling commutes with the
-    filter, and the df-order prefix is computed over the filtered
-    relation either way (pytest-pinned identical)."""
-    import os
-
+    The shingle relation is corpus_shingle_toks (the one the MinHash
+    and SimHash pipelines share) FILTERED to this query's doc_id < 2000
+    slice — per-row shingling commutes with the filter, and the
+    df-order prefix is computed over the filtered relation
+    (pytest-pinned identical to shingling the filtered documents)."""
     from ..operators.dedup import (
         corpus_shingle_toks,
         prefix_filter_jaccard_pairs,
     )
 
-    # r15: scan_fanout was A/B'd here and REJECTED (tools/ab_fanout.py:
-    # B/A 1.08-1.20 interleaved) — unlike the LSH stack, this pipeline
-    # shuffles early (the df-order frequency pass), so the map side is
-    # short and the fan-out exchange plus wide tiny stages only add
-    # overhead.  The shared-shingle bench path reads the (fanned)
-    # corpus memo, which is fine: the filter below re-slices it.
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 2000)
-    if os.environ.get("SPARK_GRAFT_SHARE_SHINGLES") == "1":
-        # r15: the shared memo is checkpointed at CORE-COUNT partitions
-        # for the LSH/SimHash kernels' benefit (scan_fanout in
-        # corpus_shingle_toks) — but this pipeline is exchange-bound
-        # (its first step is the corpus-wide frequency shuffle), so the
-        # wide map side only adds task overhead: 1.78 s at 32
-        # partitions vs 1.20 s coalesced, non-overlapping ranges
-        # (tools/ab_prefix_coalesce.py).  coalesce is NARROW over the
-        # materialized memo — it merges checkpointed partitions without
-        # re-fusing (or re-running) the shingle build.
-        p = spark.sparkContext.defaultParallelism
-        toks = (
-            corpus_shingle_toks(spark, sf_dir)
-            .coalesce(max(2, p // 8))
-            .filter(F.col("doc_id") < 2000)
-        )
-        return prefix_filter_jaccard_pairs(
-            d, threshold=0.9, shingle=3, toks=toks
-        )
-    return prefix_filter_jaccard_pairs(d, threshold=0.9, shingle=3)
+    toks = corpus_shingle_toks(spark, sf_dir).filter(F.col("doc_id") < 2000)
+    return prefix_filter_jaccard_pairs(d, threshold=0.9, shingle=3, toks=toks)
 
 
 @register(
@@ -649,15 +623,16 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this small-vocabulary corpus and ran 52 s at sf0.1; the shingled
     form admits ≈ the planted duplicates only.
 
-    r12: under SPARK_GRAFT_SHARE_SHINGLES=1 (bench heavy tier only)
-    the shingle relation comes from the shared session memo — it is
-    54 % of this query's wall time when recomputed (ab_minhash.py)
-    and byte-identical either way (pytest pin).  The 64-hash/16-band
-    retune was probed too (identical pairs, recall 1.0, 24 % faster
-    on THIS fixture) and deliberately NOT adopted: 4-row bands flatten
-    the S-curve to s⁴ — ~0.64 candidate probability at s=0.5 — which
-    re-opens the r7 candidate blow-up on any corpus with
-    mid-similarity mass; the steep s⁸ curve is the 100 TB posture."""
+    The shingle relation is corpus_shingle_toks, shared with the
+    prefix-join and SimHash pipelines — it is 54 % of this query's
+    wall time when recomputed (ab_minhash.py), so a persisted build
+    of it is read from Spark's cache (byte-identical, pytest pin).
+    The 64-hash/16-band retune was probed too (identical pairs, recall
+    1.0, 24 % faster on THIS fixture) and deliberately NOT adopted:
+    4-row bands flatten the S-curve to s⁴ — ~0.64 candidate
+    probability at s=0.5 — which re-opens the r7 candidate blow-up on
+    any corpus with mid-similarity mass; the steep s⁸ curve is the
+    100 TB posture."""
     d = load_table(spark, sf_dir, "documents")
     from ..operators.dedup import corpus_shingle_toks
 

@@ -1143,26 +1143,13 @@ def q_simhash_shingle_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence to brute force is pytest-pinned for both unit modes
     (tests/test_extensions.py, tests/test_simhash_index.py).
 
-    r12: under SPARK_GRAFT_SHARE_SHINGLES=1 (bench heavy tier) the
-    shingle arrays come from the shared session memo instead of a
-    third recompute (pytest-pinned identical).
-
-    r15: the shared memo is checkpointed at core-count partitions
-    (scan_fanout) — right for the unshared pipeline (fingerprint
-    kernel fused on the scan: 0.44× interleaved, tools/ab_fanout.py)
-    but slightly too wide for the shared kernel, whose chunk-pairing
-    joins are exchange-bound: width probe over the memo measured
-    W32 0.874 s / C8 0.679 s / C2 0.786 s (identity asserted,
-    tools/ab_simhash_coalesce.py), so the shared branch narrows to
-    cores//4 with a NARROW coalesce (merges materialized partitions;
-    never re-runs the build)."""
-    import os
-
+    The shingle arrays come from corpus_shingle_toks, the relation
+    the MinHash and prefix-join pipelines share; a persisted build of
+    it is read from Spark's cache (pytest-pinned identical).  Its
+    scan_fanout suits the fingerprint kernel fused on the scan (0.44×
+    interleaved, OPTIMIZATION_r15.md)."""
     from ..operators.dedup import corpus_shingle_toks, simhash_near_duplicates
 
     d = _t(spark, sf_dir, "documents")
     toks = corpus_shingle_toks(spark, sf_dir)
-    if os.environ.get("SPARK_GRAFT_SHARE_SHINGLES") == "1":
-        p = spark.sparkContext.defaultParallelism
-        toks = toks.coalesce(max(2, p // 4))
     return simhash_near_duplicates(d, max_hamming=3, shingle=3, toks=toks)

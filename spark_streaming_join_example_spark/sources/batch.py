@@ -161,8 +161,6 @@ def scan_fanout(df: DataFrame, sf_dir: str, name: str) -> DataFrame:
     production scale this is a no-op — never an added full shuffle of
     a large input.  Apply it only where downstream work is per-row
     heavy; plain scans/aggregates don't need it."""
-    if os.environ.get("SPARK_GRAFT_NO_FANOUT") == "1":
-        return df  # A/B kill-switch (tools/ab_fanout.py) + deployment opt-out
     path = table_path(sf_dir, name)
     try:
         if os.path.isdir(path):

@@ -24,3 +24,10 @@ def collect_sorted(df):
     cols = sorted(df.columns)
     rows = [tuple(r[c] for c in cols) for r in df.collect()]
     return sorted(rows, key=repr)
+
+
+def cached_plan_of(df) -> str:
+    """The plan after Spark's CacheManager swapped in persisted
+    relations: it names an ``InMemoryRelation`` wherever a subtree is
+    served from a persisted build."""
+    return df._jdf.queryExecution().withCachedData().toString()

@@ -94,6 +94,10 @@ def test_all_queries_execute_at_smoke_scale(spark, sf_dir):
         name, fn = item
         assert fn(spark, sf_dir).count() >= 0, name
 
+    # The builders share this one session across threads.  That is safe
+    # only while no registry builder changes a session conf (load_table's
+    # ensure_runtime_confs just re-applies what get_spark already set);
+    # a builder that needs a conf must run outside this pool.
     with ThreadPoolExecutor(max_workers=3) as pool:
         list(pool.map(smoke, queries_dict().items()))
     # graph queries persist loop-invariant edge lists; don't carry

@@ -224,6 +224,47 @@ def test_connected_components_strict_raises_on_nonconvergence(spark):
     assert any("max_iter" in str(x.message) for x in w)
 
 
+def test_star_components_labels_fixed_at_call_time(spark, tmp_path):
+    """connected_components_star materializes everything it reads
+    before returning, so the labels a caller collects later describe
+    the graph as it was during the call, even when the edge source is
+    rewritten in between (same file, same size, new node ids).  AQE is
+    off for the call: with it on, turning a plan into an RDD already
+    runs its shuffle stages, which would hide a lazy checkpoint."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_streaming_join_example_spark.operators.graph import (
+        connected_components_star,
+    )
+
+    path = str(tmp_path / "edges.parquet")
+
+    def write(pairs):
+        pq.write_table(
+            pa.table(
+                {
+                    "a_id": pa.array([a for a, _ in pairs], pa.int64()),
+                    "b_id": pa.array([b for _, b in pairs], pa.int64()),
+                }
+            ),
+            path,
+            compression="none",
+            use_dictionary=False,
+        )
+
+    write([(1, 2), (2, 3), (10, 11)])
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        labels = connected_components_star(spark.read.parquet(path))
+        write([(101, 102), (103, 104), (105, 106)])
+        got = {r.node: r.component for r in labels.collect()}
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
+
+
 def test_ivf_pairs_above_zero_vector_contract(spark):
     """r12 advisor fix: a zero-norm embedding must be excluded from
     every ≥-threshold pair DETERMINISTICALLY (cosine defined as 0,

@@ -894,6 +894,10 @@ def test_no_unintended_cartesian_product_registry_wide(spark, sf_dir, qd):
             return name, "BroadcastNestedLoopJoin"
         return None
 
+    # The builders share this one session across threads.  That is safe
+    # only while no registry builder changes a session conf (load_table's
+    # ensure_runtime_confs just re-applies what get_spark already set);
+    # a builder that needs a conf must run outside this pool.
     with ThreadPoolExecutor(max_workers=3) as pool:
         offenders = dict(r for r in pool.map(audit, sorted(qd)) if r)
     assert not offenders, offenders
@@ -1007,35 +1011,39 @@ def test_basket_pairs_chunked_is_join_free(spark):
 
 
 def test_graph_shared_edge_build_is_value_identical(spark, sf_dir, qd):
-    """plans/copurchase.py: with SPARK_GRAFT_SHARE_EDGES=1 (the bench's
-    graph-trio mode) the kernels consume one memoized persisted edge
-    relation instead of building their own — the OUTPUT must be
-    byte-identical in both modes, for both a basket_pairs consumer
-    (q_kcore) and the rewired self-join consumer (q_pagerank)."""
-    import os
+    """plans/copurchase.py: a build is shared by persisting the builder's
+    output, and Spark's CacheManager serves every re-built plan from it
+    until clearCache().  The OUTPUT must be identical with the build
+    persisted and unpersisted, for both an undirected consumer (q_kcore)
+    and a directed one (q_pagerank)."""
+    from tests.conftest import cached_plan_of, collect_sorted
 
-    from tests.conftest import collect_sorted
-
-    from spark_streaming_join_example_spark.plans import copurchase
-
-    assert not copurchase.sharing_enabled(), (
-        "SPARK_GRAFT_SHARE_EDGES leaked into the test env"
+    from spark_streaming_join_example_spark.plans.copurchase import (
+        copurchase_edges,
+        copurchase_edges_undirected,
     )
+
+    spark.catalog.clearCache()
     base_kcore = collect_sorted(qd["q_kcore"](spark, sf_dir))
     base_pr = collect_sorted(qd["q_pagerank"](spark, sf_dir))
-    os.environ["SPARK_GRAFT_SHARE_EDGES"] = "1"
-    copurchase._MEMO.clear()
+    spark.catalog.clearCache()
     try:
+        copurchase_edges_undirected(spark, sf_dir).persist().count()
+        for rebuilt in (
+            copurchase_edges_undirected(spark, sf_dir),
+            copurchase_edges(spark, sf_dir),
+        ):
+            assert "InMemoryRelation" in cached_plan_of(rebuilt)
         shared_kcore = collect_sorted(qd["q_kcore"](spark, sf_dir))
         shared_pr = collect_sorted(qd["q_pagerank"](spark, sf_dir))
-        # the second kernel reused the memoized relation
-        assert len(copurchase._MEMO) == 1
     finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_EDGES", None)
-        copurchase._MEMO.clear()
         spark.catalog.clearCache()
+    assert "InMemoryRelation" not in cached_plan_of(
+        copurchase_edges_undirected(spark, sf_dir)
+    )
     assert shared_kcore == base_kcore
     assert shared_pr == base_pr
+    assert base_kcore and base_pr, "graph queries empty — pin vacuous"
 
 
 def test_dedup_incoming_plan_is_equijoin(spark, sf_dir, qd):

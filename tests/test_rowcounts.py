@@ -52,6 +52,10 @@ def test_all_query_rowcounts_at_sf001(spark):
             return name, f"expected {EXPECTED[name]}, got {got}"
         return None
 
+    # The builders share this one session across threads.  That is safe
+    # only while no registry builder changes a session conf (load_table's
+    # ensure_runtime_confs just re-applies what get_spark already set);
+    # a builder that needs a conf must run outside this pool.
     with ThreadPoolExecutor(max_workers=3) as pool:
         mismatches = dict(
             r for r in pool.map(check, sorted(EXPECTED)) if r

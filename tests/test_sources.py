@@ -555,23 +555,15 @@ def test_scan_fanout_widens_small_scan_without_changing_rows(spark, sf_dir):
     assert collect_sorted(fanned) == collect_sorted(base)
 
 
-def test_scan_fanout_noops_for_large_inputs_and_kill_switch(
-    spark, sf_dir, monkeypatch
-):
+def test_scan_fanout_noops_for_large_inputs(spark, sf_dir, monkeypatch):
     """The fan-out must NEVER add a shuffle at production sizes: a
     table whose bytes reach defaultParallelism x openCost (4 MB) is
-    returned unchanged (the scan already reaches core-count splits),
-    and SPARK_GRAFT_NO_FANOUT=1 (the A/B kill-switch / deployment
-    opt-out) short-circuits before any stat."""
+    returned unchanged (the scan already reaches core-count splits)."""
     import os as _os
 
     import spark_streaming_join_example_spark.sources.batch as B
 
     base = load_table(spark, sf_dir, "documents")
-
-    monkeypatch.setenv("SPARK_GRAFT_NO_FANOUT", "1")
-    assert B.scan_fanout(base, sf_dir, "documents") is base
-    monkeypatch.delenv("SPARK_GRAFT_NO_FANOUT")
 
     real_getsize = _os.path.getsize
     monkeypatch.setattr(

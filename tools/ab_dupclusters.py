@@ -14,8 +14,8 @@ from the DSL per timed run — the ab_tumbling protocol):
            the way the co-purchase graph tier shares its edges.
 
 `full - (edges + cc)` ≈ 0 sanity-checks the decomposition;
-`cc` vs `full` is the headroom a SPARK_GRAFT_SHARE_DUP_EDGES-style
-bench memo could claim.  Outputs asserted identical between the full
+`cc` vs `full` is the headroom a persisted, shared dup-edge build
+could claim.  Outputs asserted identical between the full
 query and the split pipeline on the first run.
 
 Usage: python tools/ab_dupclusters.py [sf_dir] [n_runs]

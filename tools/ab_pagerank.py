@@ -17,8 +17,8 @@ quotient under AQE) into the dst-keyed sum.  Per-edge addends are the
 same integers (r div outdeg depends only on src), so the result is
 bit-identical.
 
-Both arms run the full standalone query (sharing OFF — the honest
-per-query build, same as the correctness driver); identity asserted
+Both arms run the full standalone query (no persisted edge build —
+the honest per-query build, same as the correctness driver); identity asserted
 on the first run; arms interleaved, noop-sink materialization.
 
 Usage: python tools/ab_pagerank.py [sf_dir] [n_runs]

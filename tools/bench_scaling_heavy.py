@@ -12,10 +12,11 @@ ratio evidence: a compute-bound distributed kernel should degrade
 toward core_ratio when cores shrink; a fixed-cost-bound one stays
 near 1.
 
-Method per child: bench.py's heavy discipline — shared edge build for
-the graph trio (SPARK_GRAFT_SHARE_EDGES=1, build time reported
-separately), shared shingle build for the dedup trio, clearCache +
-DSL rebuild per timed run otherwise, one warm pass then median of 3.
+Method per child: bench.py's heavy discipline — one persisted edge
+build for the graph kernels and one persisted shingle build for the
+dedup trio (build times reported separately, clearCache() after
+each group), clearCache + DSL rebuild per timed run otherwise, one
+warm pass then median of 3.
 
 Writes plans/r16/SCALING_heavy_r16.json and prints a table.
 
@@ -74,36 +75,24 @@ def child(sf_dir: str) -> None:
     for n in SOLO:
         time_q(n, clear=True)
 
-    from spark_streaming_join_example_spark.operators import dedup
+    from spark_streaming_join_example_spark.operators.dedup import (
+        corpus_shingle_toks,
+    )
+    from spark_streaming_join_example_spark.plans.copurchase import (
+        copurchase_edges_undirected,
+    )
 
-    dedup._SHARED_TOKS_MEMO.clear()
-    os.environ["SPARK_GRAFT_SHARE_SHINGLES"] = "1"
-    try:
+    for key, builder, names in (
+        ("shingle_build", corpus_shingle_toks, SHINGLE),
+        ("graph_edge_build", copurchase_edges_undirected, GRAPH),
+    ):
+        spark.catalog.clearCache()
         t0 = time.perf_counter()
-        toks = dedup.corpus_shingle_toks(spark, sf_dir)
-        toks.count()
-        out["shingle_build"] = round(time.perf_counter() - t0, 4)
-        for n in SHINGLE:
+        builder(spark, sf_dir).persist().count()
+        out[key] = round(time.perf_counter() - t0, 4)
+        for n in names:
             time_q(n, clear=False)
-    finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_SHINGLES", None)
-        dedup._SHARED_TOKS_MEMO.clear()
-
-    from spark_streaming_join_example_spark.plans import copurchase
-
-    spark.catalog.clearCache()
-    copurchase._MEMO.clear()
-    os.environ["SPARK_GRAFT_SHARE_EDGES"] = "1"
-    try:
-        t0 = time.perf_counter()
-        edges = copurchase.copurchase_edges(spark, sf_dir)
-        edges.count()
-        out["graph_edge_build"] = round(time.perf_counter() - t0, 4)
-        for n in GRAPH:
-            time_q(n, clear=False)
-    finally:
-        os.environ.pop("SPARK_GRAFT_SHARE_EDGES", None)
-        copurchase._MEMO.clear()
+        spark.catalog.clearCache()
     print("RESULT " + json.dumps(out))
 
 
