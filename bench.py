@@ -43,10 +43,11 @@ STREAMING → heavy.  r11-and-earlier artifacts ran the streaming
 drains LAST, after ~38 s of heavy-tier GC pressure, which turned the
 rows/s numbers into a box-condition band (identical code spanned
 9.8–18.5k rows/s on the temporal drain across five same-night
-probes).  The probe now runs before the heavy tier and TWICE
-(SPARK_GRAFT_STREAM_PROBES, default 2): the canonical ``streaming``
-section is the second, warm probe; the first probe plus per-job
-probe1/probe2 agreement ratios land in ``streaming_probe1``.
+probes).  The probe now runs before the heavy tier, three times
+(SPARK_GRAFT_STREAM_PROBES, default 3): the canonical ``streaming``
+section is the last probe; the first probe (a declared warmup) plus
+per-job agreement ratios (the two warmest probes, and probe1 against
+the last as ``agreement_cold``) land in ``streaming_probe1``.
 Streaming rows/s are NOT comparable to r11-and-earlier artifacts.
 """
 
@@ -101,19 +102,10 @@ def main() -> None:
     # then the timed runs, removes the run-order dependence.
     dfs = {name: qd[name](spark, sf_dir) for name in names}
 
-    def fetch(df):
-        # full driver materialization over the Arrow path (see module
-        # docstring); collect() fallback only when the method is truly
-        # absent (old PySpark) — a try/except would silently eat
-        # AttributeErrors raised INSIDE toArrow and fall back to the
-        # bridge-dominated path with no signal
-        if hasattr(df, "toArrow"):
-            df.toArrow()
-        else:
-            df.collect()
-
+    # full driver materialization over the Arrow path (see module
+    # docstring)
     for df in dfs.values():
-        fetch(df)
+        df.toArrow()
 
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
@@ -122,7 +114,7 @@ def main() -> None:
         samples = []
         for _ in range(n_runs):
             t0 = time.perf_counter()
-            fetch(df)
+            df.toArrow()
             samples.append(time.perf_counter() - t0)
         times[name] = round(statistics.median(samples), 4)
         spread[name] = [round(min(samples), 4), round(max(samples), 4)]
@@ -212,9 +204,6 @@ def main() -> None:
     # connected components, O(n²) vector top-k) whose regressions the
     # cheap headline set cannot see.  Reported separately — NOT added
     # to `value`, keeping the headline metric comparable across rounds.
-    # These queries persist loop-invariant relations, so each timed run
-    # rebuilds the DataFrame from the DSL after clearing the cache:
-    # what's measured is the full session-warm kernel, not a cache hit.
     # ------------------------------------------------------------------
     heavy_names = [
         n
@@ -261,100 +250,8 @@ def main() -> None:
         if n in qd
     ]
     n_heavy_runs = int(os.environ.get("SPARK_GRAFT_HEAVY_RUNS", "3"))
-    heavy: dict[str, float] = {}
-    heavy_spread: dict[str, list[float]] = {}
-    # The co-purchase graph kernels all run over the SAME edge relation
-    # (plans/copurchase.py); since r9 the bench times them the way a
-    # deployment runs them — one shared, persisted edge build (its cost
-    # reported separately as graph_edge_build) and the kernels over the
-    # cached relation, NO clearCache between their runs.  Everything
-    # else keeps the clear-cache-per-run discipline.  Results are
-    # value-identical either way (pytest-pinned).
-    graph_shared = {
-        "q_pagerank",
-        "q_triangle_count",
-        "q_bfs_hops",
-        "q_kcore",
-        "q_assortativity",
-    }
-
-    def time_heavy(name: str, clear_between: bool) -> None:
-        if clear_between:
-            spark.catalog.clearCache()
-        fetch(qd[name](spark, sf_dir))  # warm code paths once
-        samples = []
-        for _ in range(n_heavy_runs):
-            if clear_between:
-                spark.catalog.clearCache()
-            # the DSL build is INSIDE the timer: iterative kernels
-            # (connected components, k-core, PageRank) run their
-            # driver loop — with eager localCheckpoint materialization
-            # — at build time, so timing only the final fetch recorded
-            # fake-low numbers for exactly the queries this section
-            # exists to watch (q_dup_clusters showed 0.03 s while the
-            # real kernel cost ~20 s).  r7+ heavy numbers are
-            # therefore HIGHER and honest vs r6-and-earlier artifacts.
-            t0 = time.perf_counter()
-            fetch(qd[name](spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        heavy[name] = round(statistics.median(samples), 4)
-        heavy_spread[name] = [round(min(samples), 4), round(max(samples), 4)]
-
-    # The three shingle-unit dedup pipelines recompute the SAME corpus
-    # (doc_id, toks) relation — measured at 54 % of q_minhash_neardup's
-    # wall time at sf0.1 (tools/ab_minhash.py, r12).  Since r12 the
-    # bench times them the deployment way, mirroring the graph tier:
-    # one shared shingle build (cost reported as `shingle_build`),
-    # kernels timed over it, entries tagged "shared_shingles" in
-    # heavy_spread.  NOT comparable to r11-and-earlier numbers for
-    # these three names.
-    shingle_shared = {
-        "q_minhash_neardup",
-        "q_prefix_shingle_join",
-        "q_simhash_shingle_pairs",
-    }
-
-    def time_shared(builder, names: list[str], tag: str) -> float | None:
-        """Persist one build, time the kernels over it, then end it:
-        Spark's CacheManager serves every kernel's re-built plan from
-        the persisted relation until clearCache()."""
-        if not names:
-            return None
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).persist().count()
-        build_s = round(time.perf_counter() - t0, 4)
-        for name in names:
-            time_heavy(name, clear_between=False)
-            heavy_spread[name] = heavy_spread[name] + [tag]
-        spark.catalog.clearCache()
-        return build_s
-
-    for name in heavy_names:
-        if name not in graph_shared and name not in shingle_shared:
-            time_heavy(name, clear_between=True)
-
-    from spark_streaming_join_example_spark.operators.dedup import (
-        corpus_shingle_toks,
-    )
-    from spark_streaming_join_example_spark.plans.copurchase import (
-        copurchase_edges_undirected,
-    )
-
-    shingle_names = [n for n in heavy_names if n in shingle_shared]
-    shingle_build = time_shared(
-        corpus_shingle_toks, shingle_names, "shared_shingles"
-    )
-    # graph_edge_build is reported under its OWN top-level key, not as
-    # a pseudo-entry inside the per-query heavy map: it is a build
-    # step, not a query, and must not occupy a heavy_worst5 slot.
-    # Shared-mode kernels are tagged in heavy_spread (third element
-    # "shared_edges") so naive cross-round heavy diffs can't silently
-    # compare a pre-cached-edge number against a cold one (≤ r8).
-    shared_names = [n for n in heavy_names if n in graph_shared]
-    graph_edge_build = time_shared(
-        copurchase_edges_undirected, shared_names, "shared_edges"
-    )
+    tier = heavy_tier(spark, sf_dir, heavy_names, n_heavy_runs)
+    heavy = tier["heavy"]
 
     value = round(sum(times.values()), 4)
     out = {
@@ -365,12 +262,12 @@ def main() -> None:
         "spread": spread,
         "runs": n_runs,
         "heavy": heavy,
-        "heavy_spread": heavy_spread,
+        "heavy_spread": tier["heavy_spread"],
         "heavy_runs": n_heavy_runs,
-        "graph_shared_edges": sorted(shared_names),
-        "graph_edge_build": graph_edge_build,
-        "shingle_shared": sorted(shingle_names),
-        "shingle_build": shingle_build,
+        "graph_shared_edges": tier["graph_shared_edges"],
+        "graph_edge_build": tier["graph_edge_build"],
+        "shingle_shared": tier["shingle_shared"],
+        "shingle_build": tier["shingle_build"],
         "streaming": streaming,
         "streaming_probe1": streaming_probe1,
         # r12+: streaming probes run BEFORE the heavy tier; r13+: probe1
@@ -445,6 +342,100 @@ def main() -> None:
                 _emit(out)
                 sys.exit(3)
     _emit(out)
+
+
+#: heavy kernels over the co-purchase edge relation (plans/copurchase.py)
+GRAPH_SHARED = frozenset(
+    {"q_pagerank", "q_triangle_count", "q_bfs_hops", "q_kcore", "q_assortativity"}
+)
+#: shingle-unit dedup pipelines over the corpus (doc_id, toks) relation,
+#: measured at 54 % of q_minhash_neardup's wall time at sf0.1
+#: (SCALE.md §Round-12)
+SHINGLE_SHARED = frozenset(
+    {"q_minhash_neardup", "q_prefix_shingle_join", "q_simhash_shingle_pairs"}
+)
+
+
+def heavy_tier(spark, sf_dir: str, names: list[str], n_runs: int) -> dict:
+    """Time the heavy kernels ``names``: one warm run, then the median
+    of ``n_runs`` timed runs, each rebuilding the DataFrame from the
+    DSL.  The DSL build is inside the timer, because the iterative
+    kernels (connected components, k-core, PageRank) run their driver
+    loops at build time.
+
+    Every run starts with ``clearCache()``, so no run reads what an
+    earlier run of the same kernel persisted (PageRank's edge and
+    degree tables, BFS's edges).  The GRAPH_SHARED kernels and the
+    SHINGLE_SHARED pipelines each read one shared build, the way a
+    deployment runs them: the build is persisted and counted once,
+    timed as ``graph_edge_build`` / ``shingle_build``, and after each
+    clear it is persisted and counted again, untimed, so Spark's
+    CacheManager serves it to the run.  The build times get their own
+    keys, not heavy entries: a build is not a query and must not take a
+    ``heavy_worst5`` slot.  The shared kernels' ``heavy_spread`` entries
+    carry a third element, ``shared_edges`` / ``shared_shingles``, so a
+    cross-round diff cannot silently compare a shared-build number with
+    an unshared one.  Results are value-identical either way
+    (pytest-pinned)."""
+    from spark_streaming_join_example_spark.operators.dedup import (
+        corpus_shingle_toks,
+    )
+    from spark_streaming_join_example_spark.plans.copurchase import (
+        copurchase_edges_undirected,
+    )
+
+    qd = queries_dict()
+    heavy: dict[str, float] = {}
+    spread: dict[str, list] = {}
+
+    def time_one(name: str, builder=None) -> None:
+        def fresh() -> None:
+            spark.catalog.clearCache()
+            if builder is not None:
+                builder(spark, sf_dir).persist().count()
+
+        fresh()
+        qd[name](spark, sf_dir).toArrow()  # warm code paths once
+        samples = []
+        for _ in range(n_runs):
+            fresh()
+            t0 = time.perf_counter()
+            qd[name](spark, sf_dir).toArrow()
+            samples.append(time.perf_counter() - t0)
+        heavy[name] = round(statistics.median(samples), 4)
+        spread[name] = [round(min(samples), 4), round(max(samples), 4)]
+
+    def time_shared(builder, group, tag: str):
+        members = [n for n in names if n in group]
+        if not members:
+            return members, None
+        spark.catalog.clearCache()
+        t0 = time.perf_counter()
+        builder(spark, sf_dir).persist().count()
+        build_s = round(time.perf_counter() - t0, 4)
+        for name in members:
+            time_one(name, builder)
+            spread[name].append(tag)
+        spark.catalog.clearCache()
+        return sorted(members), build_s
+
+    for name in names:
+        if name not in GRAPH_SHARED and name not in SHINGLE_SHARED:
+            time_one(name)
+    shingle_names, shingle_build = time_shared(
+        corpus_shingle_toks, SHINGLE_SHARED, "shared_shingles"
+    )
+    graph_names, graph_edge_build = time_shared(
+        copurchase_edges_undirected, GRAPH_SHARED, "shared_edges"
+    )
+    return {
+        "heavy": heavy,
+        "heavy_spread": spread,
+        "graph_shared_edges": graph_names,
+        "graph_edge_build": graph_edge_build,
+        "shingle_shared": shingle_names,
+        "shingle_build": shingle_build,
+    }
 
 
 def _heavy_comparability(heavy: dict, prev_name, here: str) -> dict:
@@ -603,10 +594,8 @@ def _total_from_artifact(path: str) -> float | None:
     lands inside a "tail" field, keeping only the LAST ~2000 chars with
     progress-bar noise around it), so accept, in order:
       1. the plain format ({"value": ...} at top level);
-      2. a complete {"metric"...} object inside "tail";
-      3. a HEAD-TRUNCATED tail (the r7 case: "value" near the start of
-         the line was cut off, but the trailing fields survive) —
-         reconstruct value = baseline_total × vs_baseline."""
+      2. a complete {"metric"...} object inside "tail".
+    Anything else (BENCH_r07.json's head-truncated tail) yields None."""
     import re
 
     dec = json.JSONDecoder()
@@ -629,13 +618,7 @@ def _total_from_artifact(path: str) -> float | None:
                 best = obj
         except ValueError:
             continue
-    if best:
-        return float(best["value"])
-    m1 = re.search(r'"baseline_total": ([0-9.]+)', tail)
-    m2 = re.search(r'"vs_baseline": ([0-9.]+)', tail)
-    if m1 and m2:
-        return round(float(m1.group(1)) * float(m2.group(1)), 4)
-    return None
+    return float(best["value"]) if best else None
 
 
 def _recorded_totals(max_n: int = 3) -> tuple[list, list]:

@@ -136,7 +136,7 @@ def minhash_signatures(
       (k vectorized passes + segment-min per Arrow batch).  Measured
       2.06x faster than the expression path on the signature stage at
       sf0.1, 0.82x end-to-end on q_minhash_neardup, interleaved,
-      non-overlapping ranges (tools/ab_minhash.py, SCALE.md
+      non-overlapping ranges (OPTIMIZATION_r15.md §8, SCALE.md
       §Round-15).
     - ``impl="expr"``: explode + k aggregate expressions
       (min(xxhash64(i, tok))) — all-JVM, whole-stage-codegen'd; keeps
@@ -228,8 +228,8 @@ def minhash_signatures_arrow(
     Scale: identical shuffle structure to the expression path (none —
     signatures are computed where the docs live); the trade is JVM
     codegen'd aggregates vs Arrow transfer + numpy SIMD.  Which wins
-    is an empirical question per corpus shape — tools/ab_minhash.py
-    measures it interleaved (SCALE.md §Round-15)."""
+    is an empirical question per corpus shape; the sf0.1 interleaved
+    measurement is in OPTIMIZATION_r15.md §8 and SCALE.md §Round-15."""
     schema_id_type = dict(docs.dtypes).get(id_col, "bigint")
     hashed = docs.select(
         F.col(id_col),
@@ -330,7 +330,7 @@ def corpus_shingle_toks(
     """The corpus-wide (doc_id, toks) shingle relation shared by the
     three shingle-unit dedup pipelines (MinHash LSH, prefix-filter
     join, SimHash) — measured at 54 % of q_minhash_neardup's wall
-    time at sf0.1 (tools/ab_minhash.py, r12), so recomputing it per
+    time at sf0.1 (SCALE.md §Round-12), so recomputing it per
     query is the heavy tier's single biggest redundancy.
 
     It always returns the plain plan.  To share one build, persist
@@ -817,7 +817,6 @@ def simhash_near_duplicates(
     n_bits: int = 63,
     shingle: int = 1,
     toks: DataFrame | None = None,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Bucketed SimHash near-dup pairs: hamming(a, b) <= max_hamming.
 
@@ -841,11 +840,11 @@ def simhash_near_duplicates(
     (:func:`simhash_fingerprints_arrow`) — bit-identical (pytest- and
     in-probe-pinned), measured 4.1× (token units) / 2.26× (shingle
     units) faster than the one-pass HOF expression at sf0.1,
-    interleaved with non-overlapping ranges (tools/ab_simhash.py,
-    SCALE.md §Round-15).  ``impl="expr"`` keeps the all-JVM form
-    selectable; the streaming simhash index stays on the expression
-    path deliberately (its per-batch increments are tiny and the
-    inline Column form keeps its plan simple).
+    interleaved with non-overlapping ranges (OPTIMIZATION_r15.md §9,
+    SCALE.md §Round-15).  The streaming simhash index stays on the
+    all-JVM expression (:func:`simhash63`) deliberately (its per-batch
+    increments are tiny and the inline Column form keeps its plan
+    simple).
     """
     if toks is None:
         unit = (
@@ -856,18 +855,9 @@ def simhash_near_duplicates(
         src = docs.select(F.col(id_col), unit.alias("toks"))
     else:
         src = toks
-    if impl == "arrow":
-        fp_df = simhash_fingerprints_arrow(
-            src, id_col, F.col("toks"), n_bits
-        )
-    elif impl == "expr":
-        fp_df = src.select(
-            F.col(id_col),
-            simhash63(F.col("toks"), n_bits=n_bits).alias("fp"),
-        )
-    else:
-        raise ValueError(f"simhash_near_duplicates: unknown impl {impl!r}")
-    fp = fp_df.localCheckpoint(eager=True)
+    fp = simhash_fingerprints_arrow(
+        src, id_col, F.col("toks"), n_bits
+    ).localCheckpoint(eager=True)
     chunks = fp.select(
         F.col(id_col),
         "fp",

@@ -454,7 +454,7 @@ def kcore(
     ONE eager checkpoint — the mirrored orientations cannot collide
     with the half relation (src < dst vs src > dst), so both setup
     dedup shuffles are provably redundant and skipped.  A/B'd
-    interleaved at sf0.1 (tools/ab_kcore.py: 0.891x median, identical
+    interleaved at sf0.1 (OPTIMIZATION_r15.md §4: 0.891x median, identical
     fixpoint); equivalence to the generic path is pinned on random
     graphs in tests/test_properties.py.  The generic path stays the
     default for arbitrary directed input.
@@ -546,7 +546,7 @@ def bfs_hops(
         # most expansion targets are already visited, and filtering
         # them out via the broadcast-hash anti (no shuffle) shrinks
         # the one per-round exchange by the visited fraction
-        # (tools/ab_bfs.py: 2.458 s → 2.041 s at sf0.1, identity
+        # (OPTIMIZATION_r15.md §7: 2.458 s → 2.041 s at sf0.1, identity
         # asserted).  At cluster scale, where the anti join is itself
         # a shuffled join on the node key, the distinct REUSES its
         # partitioning, so the round still pays a single

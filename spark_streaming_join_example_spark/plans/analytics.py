@@ -189,8 +189,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .persist()
     )
-    # r15 iteration restructure (guide §2.4, A/B'd in
-    # tools/ab_pagerank.py): ONE persisted groupBy("src") yields the
+    # r15 iteration restructure (guide §2.4, A/B in
+    # OPTIMIZATION_r15.md §3): ONE persisted groupBy("src") yields the
     # degree table AND the node set (the graph is symmetric, so every
     # node appears as src) — the separate nodes-distinct shuffle over
     # edges disappears — and the per-src quotient ``r div outdeg`` is

@@ -158,7 +158,7 @@ def q_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     to epoch seconds (verified: -0.5 s -> -1) and ``pmod`` keeps the
     bucket a floor for pre-epoch rows, making the rewrite exact for
     ALL timestamps, not just the fixture domain.  Measured vs
-    date_trunc at sf0.1 (tools/ab_tumbling.py, 4 interleaved runs of
+    date_trunc at sf0.1 (SCALE.md §Round-13, 4 interleaved runs of
     15): medians 0.151-0.176 s vs 0.177-0.233 s — 5-32% faster with
     lower min AND max every run; results asserted identical in-probe.
     The real window() operator is still exercised on this same

@@ -625,7 +625,7 @@ def q_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The shingle relation is corpus_shingle_toks, shared with the
     prefix-join and SimHash pipelines — it is 54 % of this query's
-    wall time when recomputed (ab_minhash.py), so a persisted build
+    wall time when recomputed (SCALE.md §Round-12), so a persisted build
     of it is read from Spark's cache (byte-identical, pytest pin).
     The 64-hash/16-band retune was probed too (identical pairs, recall
     1.0, 24 % faster on THIS fixture) and deliberately NOT adopted:

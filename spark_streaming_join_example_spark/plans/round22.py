@@ -975,8 +975,8 @@ def q_self_asof_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWO relations (clicks→purchases, tolerances, LOCF); the
     one-relation backward as-of — compiled to a lag carry over one
     keyed sort, no join at all — is the remaining formulation, and the
-    same plan shape the carry-vs-join scale probe (tools/ab_asof.py,
-    SCALE.md §Round-13/14) proves flat in per-key depth.
+    same plan shape the carry-vs-join scale probe (SCALE.md
+    §Round-13/14) proves flat in per-key depth.
 
     Ties: (o_orderdate, o_orderkey) ordering makes the predecessor
     deterministic in both engines; date_diff on day-truncated

@@ -648,7 +648,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # input_distinct_half declares basket_pairs' contract (distinct,
     # u < v, no self-loops), letting the setup skip BOTH dedup
     # shuffles outright — lazy mirror union, one checkpoint (A/B'd
-    # 0.891x in tools/ab_kcore.py; equivalence pinned in
+    # 0.891x in OPTIMIZATION_r15.md §4; equivalence pinned in
     # tests/test_properties.py).
     edges = copurchase_edges_undirected(spark, sf_dir)
     return kcore(edges, k=16, input_distinct_half=True).orderBy("node")
@@ -833,7 +833,7 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ordering), each over a NARROW (user_id, metric) projection, and
     the integer scores join back on user_id (user-cardinality; AQE
     broadcasts locally, co-partitions at scale).  The fan-out beats
-    the r5 chained form 0.794× (tools/ab_rfm.py, identity asserted):
+    the r5 chained form 0.794× (OPTIMIZATION_r15.md §11, identity asserted):
     the three range shuffles carry 2 columns instead of the
     ever-widening full row, and the three sort barriers are
     independent subtrees Spark schedules concurrently instead of

@@ -369,7 +369,7 @@ def q_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops non-qualifying rows BEFORE the groupBy.  Exact because the
     predicate is on a grouping key: it removes whole (partkey,
     suppkey) groups the p_size join removed identically, never a row
-    of a surviving group (tools/ab_partsupp.py asserts row identity;
+    of a surviving group (OPTIMIZATION_r15.md §6: row identity asserted;
     interleaved timing 1.209 s → 0.687 s at sf0.1).  At 100 TB this
     is the §3.2 semi-join/Bloom shape: shuffle 2% of the catalog
     rows instead of all of them."""
@@ -459,7 +459,7 @@ def q_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     drops non-qualifying rows BEFORE the (partkey, suppkey) groupBy.
     Exact because the predicate is on a grouping key — whole groups
     the post-aggregate inner join removed identically
-    (tools/ab_partsupp.py asserts row identity; interleaved timing
+    (OPTIMIZATION_r15.md §6: row identity asserted; interleaved timing
     1.431 s → 0.777 s at sf0.1)."""
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier")

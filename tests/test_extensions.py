@@ -75,7 +75,7 @@ def test_minhash_arrow_kernel_bit_identical(spark, sf_dir):
     """The Arrow-batched signature kernel (numpy reimplementation of
     Spark's seed-chained XxHash64 int/long paths) must produce
     BIT-IDENTICAL signatures to the column-expression path — the
-    precondition for tools/ab_minhash.py's interleaved perf A/B to be
+    precondition for OPTIMIZATION_r15.md §8's interleaved perf A/B to be
     an apples-to-apples comparison, and for either path to back the
     same frozen streaming index scheme.  Any divergence in the
     reimplemented rotl/fmix/seed arithmetic shows up as a wrong long

@@ -121,3 +121,23 @@ def test_no_edge_cardinality_broadcast_markers():
             if pat.search(line) and "# bounded:" not in line:
                 offenders.append(f"{path.name}:{i}: {line.strip()}")
     assert not offenders, offenders
+
+
+def test_cited_tools_exist():
+    """A ``tools/<name>.py`` path cited in the engine, the tests, the
+    bench, the README or the verify recipe names a script that exists:
+    a deleted probe's verdict is cited by the doc section that holds
+    it, not by the script."""
+    import re
+
+    repo = TESTS.parent
+    sources = [*PKG.rglob("*.py"), *PKG.rglob("*.md"), *TESTS.glob("*.py")]
+    sources += [repo / "bench.py", repo / "README.md", repo / ".claude/skills/verify/SKILL.md"]
+    cited = {
+        (str(path.relative_to(repo)), m)
+        for path in sources
+        if path.exists()
+        for m in re.findall(r"tools/\w+\.py", path.read_text())
+    }
+    missing = sorted(f"{src}: {tool}" for src, tool in cited if not (repo / tool).exists())
+    assert not missing, missing

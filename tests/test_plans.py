@@ -710,7 +710,7 @@ def test_reworked_global_windows_single_partition_is_metadata_only(
 
 
 def test_rfm_fanout_matches_chained_form(spark, sf_dir, qd):
-    """r15 fan-out adoption (tools/ab_rfm.py): the registered
+    """r15 fan-out adoption (OPTIMIZATION_r15.md §11): the registered
     q_rfm_segments now ranks three narrow (user_id, metric)
     projections independently and joins the scores back on user_id.
     Equivalence pin vs the pre-r15 CHAINED global_ntile form: each

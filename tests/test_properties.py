@@ -362,7 +362,7 @@ def test_kcore_matches_model(spark, edges, k):
 def test_kcore_distinct_half_path_matches_generic(spark, edges, k):
     """kcore(input_distinct_half=True) over the deduplicated u < v
     half relation ≡ the generic path over the raw directed edge list
-    (the r15 setup-shuffle skip, tools/ab_kcore.py): the mirror union
+    (the r15 setup-shuffle skip, OPTIMIZATION_r15.md §4): the mirror union
     of a distinct half cannot collide with itself, so skipping both
     setup dedup shuffles must not move the fixpoint."""
     from spark_streaming_join_example_spark.operators.graph import kcore

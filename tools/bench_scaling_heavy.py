@@ -12,11 +12,8 @@ ratio evidence: a compute-bound distributed kernel should degrade
 toward core_ratio when cores shrink; a fixed-cost-bound one stays
 near 1.
 
-Method per child: bench.py's heavy discipline — one persisted edge
-build for the graph kernels and one persisted shingle build for the
-dedup trio (build times reported separately, clearCache() after
-each group), clearCache + DSL rebuild per timed run otherwise, one
-warm pass then median of 3.
+Method per child: bench.py's heavy tier (``bench.heavy_tier``), three
+timed runs per query.
 
 Writes plans/r16/SCALING_heavy_r16.json and prints a table.
 
@@ -28,71 +25,32 @@ from __future__ import annotations
 
 import json
 import os
-import statistics
 import subprocess
 import sys
-import time
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 REPO = os.path.dirname(HERE)
 sys.path.insert(0, REPO)
 
-GRAPH = ["q_pagerank", "q_triangle_count", "q_bfs_hops", "q_kcore",
-         "q_assortativity"]
-SHINGLE = ["q_minhash_neardup", "q_prefix_shingle_join",
-           "q_simhash_shingle_pairs"]
-SOLO = ["q_dup_clusters", "q_cosine_topk", "q_cross_doc_ngram_dup",
-        "q_rfm_segments", "q_collab_filter", "q_pq_topk"]
+HEAVY = ["q_dup_clusters", "q_cosine_topk", "q_cross_doc_ngram_dup",
+         "q_rfm_segments", "q_collab_filter", "q_pq_topk",
+         "q_minhash_neardup", "q_prefix_shingle_join",
+         "q_simhash_shingle_pairs", "q_pagerank", "q_triangle_count",
+         "q_bfs_hops", "q_kcore", "q_assortativity"]
 
 
 def child(sf_dir: str) -> None:
+    from bench import heavy_tier
     from spark_streaming_join_example_spark import get_spark
-    from spark_streaming_join_example_spark.plans.registry import (
-        queries_dict,
-    )
 
     spark = get_spark("scaling-heavy")
     spark.sparkContext.setLogLevel("ERROR")
-    qd = queries_dict()
-    out: dict[str, float] = {}
-
-    def fetch(df):
-        df.toArrow() if hasattr(df, "toArrow") else df.collect()
-
-    def time_q(name, clear):
-        if clear:
-            spark.catalog.clearCache()
-        fetch(qd[name](spark, sf_dir))  # warm
-        samples = []
-        for _ in range(3):
-            if clear:
-                spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            fetch(qd[name](spark, sf_dir))
-            samples.append(time.perf_counter() - t0)
-        out[name] = round(statistics.median(samples), 4)
-
-    for n in SOLO:
-        time_q(n, clear=True)
-
-    from spark_streaming_join_example_spark.operators.dedup import (
-        corpus_shingle_toks,
-    )
-    from spark_streaming_join_example_spark.plans.copurchase import (
-        copurchase_edges_undirected,
-    )
-
-    for key, builder, names in (
-        ("shingle_build", corpus_shingle_toks, SHINGLE),
-        ("graph_edge_build", copurchase_edges_undirected, GRAPH),
-    ):
-        spark.catalog.clearCache()
-        t0 = time.perf_counter()
-        builder(spark, sf_dir).persist().count()
-        out[key] = round(time.perf_counter() - t0, 4)
-        for n in names:
-            time_q(n, clear=False)
-        spark.catalog.clearCache()
+    tier = heavy_tier(spark, sf_dir, HEAVY, 3)
+    out = {
+        **tier["heavy"],
+        "shingle_build": tier["shingle_build"],
+        "graph_edge_build": tier["graph_edge_build"],
+    }
     print("RESULT " + json.dumps(out))
 
 

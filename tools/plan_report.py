@@ -97,8 +97,8 @@ SHOWCASE = [
     "q_unsold_parts_right",
     "q_asof_backward_tol",
     # round-13 (round20 stock): the UNBOUNDED forward as-of as a pure
-    # window carry (one user-key shuffle, zero joins — tools/ab_asof.py
-    # measures the pair-join alternative degrading 1.9x→3.8x with
+    # window carry (one user-key shuffle, zero joins — SCALE.md
+    # §Round-13/14 measures the pair-join alternative degrading 1.9x→3.8x with
     # per-user depth), the prefix-blocked containment join (candidates
     # 0.02% of all-pairs at sf0.01), and the 3-dim snowflake chain
     # (three back-to-back BroadcastHashJoins, fact never shuffles
