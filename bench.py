@@ -2,18 +2,15 @@
 """Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line:
-  {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
-
-Artifact size contract (round-8 fix): the driver records only the last
-~2000 characters of stdout, and r7's enlarged JSON (streaming +
-heavy_spread sections) overflowed that window — BENCH_r07.json has
-"parsed": null and the per-query detail was lost.  The FINAL stdout
-line is therefore a COMPACT summary (total, per-headline-query,
-vs_baseline, drift, worst-5 heavy, streaming rows/s — asserted
-< 1900 chars); the full payload goes to BENCH_FULL.json next to this
-script (file only — a long stdout line would leave a truncated JSON
-fragment inside the driver's tail window).
+The FINAL stdout line is a compact JSON summary (total, per-headline-
+query warm medians, vs_baseline, heavy_total with the worst five heavy
+kernels, streaming rows/s), kept at most 1900 characters because a
+harness that records only the last ~2000 characters of stdout must
+still find a whole, parseable line.  The full payload goes to
+BENCH_FULL.json next to this script (file only: a long stdout line
+would leave a truncated JSON fragment inside that tail window).  A run
+reports only what it measured plus its ratio to the DuckDB baseline;
+same-box comparisons between two commits are tools/ab.py's job.
 
 Method mirrors BASELINE.md: one shared SparkSession (Spark's per-query
 fixed overhead dominates at this scale); each query's DataFrame is
@@ -30,25 +27,19 @@ in any long-lived deployment. `value` is the sum of warm medians.
 
 Materialization is `df.toArrow()` — a FULL driver-side result fetch
 over Spark's Arrow path, the production materialization for any
-Python consumer.  The old `collect()` decoded every row through Py4J
-pickling, which at 3-15k result rows measured the bridge (~25-140 ms)
+Python consumer.  `collect()` decodes every row through Py4J
+pickling, which at 3-15k result rows measures the bridge (~25-140 ms)
 instead of the engine; the DuckDB baseline's fetch is a native
 columnar read that never pays an equivalent cost, so Arrow is the
-apples-to-apples fetch (A/B at sf0.1: q_events_tumbling 0.104 →
-0.060 s, q_window_rank 0.226 → 0.086 s; aggregation-only timings are
-unchanged).
+apples-to-apples fetch.
 
-Section order (round-12 fix, VERDICT r11 item 2): headline →
-STREAMING → heavy.  r11-and-earlier artifacts ran the streaming
-drains LAST, after ~38 s of heavy-tier GC pressure, which turned the
-rows/s numbers into a box-condition band (identical code spanned
-9.8–18.5k rows/s on the temporal drain across five same-night
-probes).  The probe now runs before the heavy tier, three times
-(SPARK_GRAFT_STREAM_PROBES, default 3): the canonical ``streaming``
-section is the last probe; the first probe (a declared warmup) plus
-per-job agreement ratios (the two warmest probes, and probe1 against
-the last as ``agreement_cold``) land in ``streaming_probe1``.
-Streaming rows/s are NOT comparable to r11-and-earlier artifacts.
+Section order: headline → STREAMING → heavy.  The streaming drains run
+before the heavy tier, whose GC pressure would otherwise turn their
+rows/s into a box-condition band.  The probe runs three times: the
+canonical ``streaming`` section is the last probe; the first probe (a
+declared warmup) plus per-job agreement ratios (the two warmest
+probes, and probe1 against the last as ``agreement_cold``) land in
+``streaming_probe1``.
 """
 
 from __future__ import annotations
@@ -81,6 +72,10 @@ BASELINE_WARM_SF01 = {
     "q_text_tokens": 0.108,
     "q_cosine_topk": 0.185,
 }
+
+#: streaming probes per run: probe1 is the declared warmup, the last is
+#: canonical, and `agreement` compares the last two
+N_STREAM_PROBES = 3
 
 
 def main() -> None:
@@ -125,85 +120,64 @@ def main() -> None:
     # temporal join) draining the chunked events fixture under
     # trigger(availableNow) into a noop sink — batched mode only here
     # (~25 s/probe; the chunked sustained-latency mode stays in
-    # tools/stress_stream.py).
-    #
-    # SECTION ORDER (r12, VERDICT r11 item 2): this section runs
-    # BEFORE the heavy tier.  r11's artifact ran it last, after ~38 s
-    # of heavy-tier GC pressure, and five same-night probes of
-    # identical code spanned 9.8–18.5k rows/s on the temporal drain —
-    # the number was a box-condition band, not a signal.  Probing
-    # first (and twice — the second, warm probe is the canonical
-    # ``streaming`` section; the first is kept under
-    # ``streaming_probe1`` with per-job agreement ratios) makes the
-    # rows/s comparable round-over-round.  NOT comparable to
-    # r11-and-earlier streaming numbers, which paid the heavy tier's
-    # GC bill first.
+    # tools/stress_stream.py).  Runs BEFORE the heavy tier (see module
+    # docstring).
     # ------------------------------------------------------------------
     streaming = None
     streaming_probe1 = None
-    n_stream_probes = max(
-        1, int(os.environ.get("SPARK_GRAFT_STREAM_PROBES", "3"))
-    )
     if os.environ.get("SPARK_GRAFT_BENCH_STREAMING", "1") != "0":
         try:
             from tools.stress_stream import probe as stream_probe
 
-            # Three probes since r13 (VERDICT r12 item 6): on the r12
-            # driver box the probe1/probe2 ratio hit 0.633 on enrich —
-            # probe1 still carries first-drain warmup (checkpoint dir
-            # creation, state-store class loading, sink codegen), so a
-            # 2-probe scheme conflates warmup with reproducibility.
-            # Probe1 is now a DECLARED warmup; the canonical number is
-            # the LAST probe and `agreement` compares the two WARMEST
-            # probes (probe2/probe3), which is the actual in-session
-            # reproducibility claim.  The cold-warm gap stays visible
-            # as `agreement_cold` (probe1/probeN).
+            # Probe1 still carries first-drain warmup (checkpoint dir
+            # creation, state-store class loading, sink codegen), so it
+            # is a DECLARED warmup: the canonical number is the LAST
+            # probe and `agreement` compares the two WARMEST probes
+            # (probe2/probe3), the in-session reproducibility claim.
+            # The cold-warm gap stays visible as `agreement_cold`
+            # (probe1/probe3).
             probes = [
                 stream_probe(spark, sf_dir, modes=("batched",))
-                for _ in range(n_stream_probes)
+                for _ in range(N_STREAM_PROBES)
             ]
             streaming = probes[-1]
-            if len(probes) > 1:
-                # job payload shape: {job: {mode: {"s":…, "rows_per_s":…}}}
-                def _rps(probe):
-                    flat = {}
-                    for job, modes in (probe.get("jobs") or {}).items():
-                        if isinstance(modes, dict):
-                            for payload in modes.values():
-                                if isinstance(payload, dict) and payload.get(
-                                    "rows_per_s"
-                                ):
-                                    flat[job] = payload["rows_per_s"]
-                                    break
-                    return flat
 
-                rn = _rps(streaming)
-                r_prev = _rps(probes[-2])
-                r_cold = _rps(probes[0])
-                streaming_probe1 = {
-                    "jobs": probes[0].get("jobs"),
-                    # warmest-pair rows-per-sec ratio per job: a value
-                    # near 1.0 means the number is reproducible in-session
-                    "agreement": {
-                        k: round(r_prev[k] / rn[k], 3)
-                        for k in r_prev
-                        if rn.get(k)
-                    },
-                    # first-drain warmup gap (probe1 / canonical)
-                    "agreement_cold": {
-                        k: round(r_cold[k] / rn[k], 3)
-                        for k in r_cold
-                        if rn.get(k)
-                    },
-                }
+            # job payload shape: {job: {mode: {"s":…, "rows_per_s":…}}}
+            def _rps(probe):
+                flat = {}
+                for job, modes in (probe.get("jobs") or {}).items():
+                    if isinstance(modes, dict):
+                        for payload in modes.values():
+                            if isinstance(payload, dict) and payload.get(
+                                "rows_per_s"
+                            ):
+                                flat[job] = payload["rows_per_s"]
+                                break
+                return flat
+
+            rn = _rps(streaming)
+            r_prev = _rps(probes[-2])
+            r_cold = _rps(probes[0])
+            streaming_probe1 = {
+                "jobs": probes[0].get("jobs"),
+                # warmest-pair rows-per-sec ratio per job: a value
+                # near 1.0 means the number is reproducible in-session
+                "agreement": {
+                    k: round(r_prev[k] / rn[k], 3) for k in r_prev if rn.get(k)
+                },
+                # first-drain warmup gap (probe1 / canonical)
+                "agreement_cold": {
+                    k: round(r_cold[k] / rn[k], 3) for k in r_cold if rn.get(k)
+                },
+            }
         except Exception as e:  # never let the probe sink the artifact
             streaming = {"error": f"{type(e).__name__}: {e}"}
 
     # ------------------------------------------------------------------
     # Heavy kernels: the expensive distributed paths (graph joins,
-    # connected components, O(n²) vector top-k) whose regressions the
-    # cheap headline set cannot see.  Reported separately — NOT added
-    # to `value`, keeping the headline metric comparable across rounds.
+    # connected components, O(n²) vector top-k, global-window ranking,
+    # shingle dedup) whose regressions the cheap headline set cannot
+    # see.  Reported separately — NOT added to `value`.
     # ------------------------------------------------------------------
     heavy_names = [
         n
@@ -216,11 +190,8 @@ def main() -> None:
             "q_kcore",
             "q_collab_filter",
             "q_assortativity",
-            # the round-6 two-phase global-window reworks (ntile/rank/
-            # cumsum via operators/ranking): locally these pay fixed
-            # multi-stage overhead vs the old single-partition sort —
-            # tracked here so the scale-safe plans have recorded,
-            # comparable numbers every round
+            # two-phase global windows (ntile/rank/cumsum via
+            # operators/ranking): multi-stage, scale-safe plans
             "q_equi_depth_histogram",
             "q_rrf_fusion",
             "q_shard_assign",
@@ -229,29 +200,20 @@ def main() -> None:
             "q_calibration_bins",
             "q_pr_curve",
             "q_ks_statistic",
-            # round-6 TPC-H gap shapes that build the derived
-            # partsupp catalog (a |lineitem| groupBy) per run
+            # build the derived partsupp catalog (a |lineitem| groupBy)
             "q_min_cost_supplier",
             "q_important_stock",
-            # round-7 additions: corpus-wide shingle dup (token-linear
-            # shuffle + count window) and PQ candidate+rerank
+            # corpus-wide shingle dedup and vector candidate+rerank
             "q_cross_doc_ngram_dup",
             "q_pq_topk",
-            # round-8: the retuned shingled MinHash LSH (was the
-            # slowest registered query at 52 s pre-retune; watch it)
             "q_minhash_neardup",
-            # round-9: the exact shingle-unit prefix-filter join (the
-            # provably-complete dedup scale path; new operator mode)
             "q_prefix_shingle_join",
-            # round-10: shingle-unit SimHash pairs (the scale mode of
-            # the third dedup blocker; one-pass fingerprint kernel)
             "q_simhash_shingle_pairs",
         )
         if n in qd
     ]
     n_heavy_runs = int(os.environ.get("SPARK_GRAFT_HEAVY_RUNS", "3"))
     tier = heavy_tier(spark, sf_dir, heavy_names, n_heavy_runs)
-    heavy = tier["heavy"]
 
     value = round(sum(times.values()), 4)
     out = {
@@ -261,7 +223,7 @@ def main() -> None:
         "queries": times,
         "spread": spread,
         "runs": n_runs,
-        "heavy": heavy,
+        "heavy": tier["heavy"],
         "heavy_spread": tier["heavy_spread"],
         "heavy_runs": n_heavy_runs,
         "graph_shared_edges": tier["graph_shared_edges"],
@@ -270,27 +232,10 @@ def main() -> None:
         "shingle_build": tier["shingle_build"],
         "streaming": streaming,
         "streaming_probe1": streaming_probe1,
-        # r12+: streaming probes run BEFORE the heavy tier; r13+: probe1
-        # is declared warmup, canonical is the LAST probe and
-        # `agreement` compares the two warmest — see section comment.
-        # Built from the actual probe count so an override via
-        # SPARK_GRAFT_STREAM_PROBES is recorded faithfully (at n<3 the
-        # warmup/agreement split collapses: agreement == agreement_cold
-        # at n=2; neither exists at n=1).
         "streaming_method": (
-            f"pre-heavy, canonical=probe{n_stream_probes}-of-"
-            f"{n_stream_probes}, "
-            + (
-                f"agreement=probe{n_stream_probes - 1}/probe"
-                f"{n_stream_probes}, probe1=warmup"
-                + (
-                    " (n<3: warmup/agreement split collapses)"
-                    if n_stream_probes < 3
-                    else ""
-                )
-                if n_stream_probes > 1
-                else "single probe (no agreement)"
-            )
+            f"pre-heavy, canonical=probe{N_STREAM_PROBES}-of-"
+            f"{N_STREAM_PROBES}, agreement=probe{N_STREAM_PROBES - 1}/"
+            f"probe{N_STREAM_PROBES}, probe1=warmup"
         ),
         "sf": sf,
     }
@@ -301,46 +246,6 @@ def main() -> None:
         out["vs_baseline_per_query"] = {
             q: round(times[q] / b, 3) for q, b in BASELINE_WARM_SF01.items()
         }
-
-    # ------------------------------------------------------------------
-    # Round-over-round drift guard (the r6 lesson: a uniform +28%
-    # environmental drift shipped unexplained).  Compare this total
-    # against the newest BENCH_r*.json artifact; always RECORD the
-    # ratio + any named cause in the artifact so drift can never ship
-    # silently, and fail hard only under the builder's own gate
-    # (SPARK_GRAFT_BENCH_GUARD=1) — the driver's recording run must
-    # still produce an artifact on a noisy box.
-    # ------------------------------------------------------------------
-    recents, skipped = _recorded_totals()
-    if skipped:
-        # artifacts we could not recover a total from, recorded so a
-        # round-over-round comparison can never silently lose a round
-        # again (the r8 lesson: r7's artifact was skipped without trace
-        # and r8's drift quietly compared to r6)
-        out["skipped_unparseable"] = skipped
-    if recents:
-        prev_name, prev_total = recents[0]
-        out["prev_artifact"] = prev_name
-        out["prev_total"] = prev_total
-        out["drift_vs_prev"] = round(value / prev_total, 3)
-        if len(recents) > 1:
-            # the two rounds before prev, when recoverable — enough
-            # context to spot shared-box noise vs a real trend
-            out["recent_totals"] = dict(recents[1:])
-        cause = os.environ.get("SPARK_GRAFT_DRIFT_CAUSE")
-        if cause:
-            out["drift_cause"] = cause
-        if out["drift_vs_prev"] > 1.5 and not cause:
-            msg = (
-                f"BENCH GUARD: headline total {value}s is "
-                f"{out['drift_vs_prev']}x {prev_name}'s {prev_total}s "
-                "(>1.5x) with no named cause — re-run on a quiet box or "
-                "set SPARK_GRAFT_DRIFT_CAUSE to record an explanation"
-            )
-            print(msg, file=sys.stderr)
-            if os.environ.get("SPARK_GRAFT_BENCH_GUARD") == "1":
-                _emit(out)
-                sys.exit(3)
     _emit(out)
 
 
@@ -374,9 +279,8 @@ def heavy_tier(spark, sf_dir: str, names: list[str], n_runs: int) -> dict:
     keys, not heavy entries: a build is not a query and must not take a
     ``heavy_worst5`` slot.  The shared kernels' ``heavy_spread`` entries
     carry a third element, ``shared_edges`` / ``shared_shingles``, so a
-    cross-round diff cannot silently compare a shared-build number with
-    an unshared one.  Results are value-identical either way
-    (pytest-pinned)."""
+    reader cannot mistake a shared-build number for an unshared one.
+    Results are value-identical either way (pytest-pinned)."""
     from spark_streaming_join_example_spark.operators.dedup import (
         corpus_shingle_toks,
     )
@@ -438,72 +342,13 @@ def heavy_tier(spark, sf_dir: str, names: list[str], n_runs: int) -> dict:
     }
 
 
-def _heavy_comparability(heavy: dict, prev_name, here: str) -> dict:
-    """``heavy_total_comparable``: the subset of this run's heavy tier
-    that the PREVIOUS artifact's heavy_total could also contain, so a
-    cross-round heavy drift read needs no manual subtraction (the r10
-    lesson: q_simhash_shingle_pairs landed mid-round and r10's
-    heavy_total was silently not comparable to r9's).
-
-    A name ledger (BENCH_HEAVY_NAMES.json, committed) records, per
-    heavy query, the newest BENCH_r*.json that existed when the name
-    FIRST appeared.  A name whose first-seen artifact IS the current
-    prev artifact was added after prev was recorded, so prev's total
-    cannot include it — exclude it from the comparable sum and list it
-    under ``heavy_new``.  Names present in the ledger (and in prev's
-    total) but absent from this run are listed under ``heavy_dropped``
-    and trimmed, so a later re-add is treated as new again."""
-    path = os.path.join(here, "BENCH_HEAVY_NAMES.json")
-    try:
-        with open(path) as f:
-            ledger = json.load(f)
-        if not isinstance(ledger, dict):
-            ledger = {}
-    except Exception:
-        ledger = {}
-    marker = prev_name or ""
-    for name in heavy:
-        ledger.setdefault(name, marker)
-    new = sorted(n for n in heavy if marker and ledger[n] == marker)
-    dropped = sorted(
-        n for n in ledger if n not in heavy and ledger[n] != marker
-    )
-    ledger = {n: v for n, v in ledger.items() if n in heavy}
-    try:
-        with open(path, "w") as f:
-            json.dump(ledger, f, indent=0, sort_keys=True)
-            f.write("\n")
-    except OSError:
-        pass  # read-only checkout: comparability is still emitted
-    res = {
-        "heavy_total_comparable": round(
-            sum(v for n, v in heavy.items() if n not in set(new)), 3
-        )
-    }
-    if new:
-        res["heavy_new"] = new
-    if dropped:
-        res["heavy_dropped"] = dropped
-    return res
-
-
 def _emit(out: dict) -> None:
-    """Write the full payload to BENCH_FULL.json (file ONLY — a long
-    stdout line would leave a truncated fragment in the driver's tail
-    window), then print the compact summary as the FINAL stdout line
-    (driver keeps ~2000 chars of tail; see module docstring)."""
+    """Write the full payload to BENCH_FULL.json next to this script
+    (file ONLY — see module docstring), then print the compact summary
+    as the FINAL stdout line, at most 1900 characters."""
     here = os.path.dirname(os.path.abspath(__file__))
-    out.update(
-        _heavy_comparability(
-            out.get("heavy") or {}, out.get("prev_artifact"), here
-        )
-    )
-    full = json.dumps(out)
     with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
-        f.write(full + "\n")
-    # full JSON goes ONLY to the file: a >2000-char stdout line would
-    # leave a truncated JSON fragment inside the driver's tail window
-    # right above the compact line
+        f.write(json.dumps(out) + "\n")
 
     heavy = out.get("heavy") or {}
     worst5 = dict(
@@ -535,17 +380,8 @@ def _emit(out: dict) -> None:
             "baseline_total",
             "vs_baseline",
             "vs_baseline_per_query",
-            "prev_artifact",
-            "prev_total",
-            "drift_vs_prev",
-            "drift_cause",
-            "recent_totals",
-            "skipped_unparseable",
             "graph_edge_build",
             "shingle_build",
-            "heavy_total_comparable",
-            "heavy_new",
-            "heavy_dropped",
         )
         if k in out
     }
@@ -555,7 +391,7 @@ def _emit(out: dict) -> None:
     compact["full"] = "BENCH_FULL.json"
     line = json.dumps(compact)
     # hard guarantee the artifact window: drop payload in priority
-    # order rather than ship another unparseable round — and if the
+    # order rather than ship an unparseable line — and if the
     # always-kept maps ever outgrow the window anyway (a larger
     # headline panel), fall back to a minimal parseable line instead
     # of crashing a bench whose measurements all succeeded
@@ -563,11 +399,6 @@ def _emit(out: dict) -> None:
         "vs_baseline_per_query",
         "streaming_rows_s",
         "heavy_worst5",
-        "heavy_new",
-        "heavy_dropped",
-        "recent_totals",
-        "skipped_unparseable",
-        "spread",
     ):
         if len(line) <= 1900:
             break
@@ -585,64 +416,6 @@ def _emit(out: dict) -> None:
             }
         )
     print(line)
-
-
-def _total_from_artifact(path: str) -> float | None:
-    """Headline total recovered from one BENCH_r*.json artifact.
-
-    The driver wraps bench.py's JSON line in its own artifact (the line
-    lands inside a "tail" field, keeping only the LAST ~2000 chars with
-    progress-bar noise around it), so accept, in order:
-      1. the plain format ({"value": ...} at top level);
-      2. a complete {"metric"...} object inside "tail".
-    Anything else (BENCH_r07.json's head-truncated tail) yields None."""
-    import re
-
-    dec = json.JSONDecoder()
-    try:
-        with open(path) as f:
-            raw = json.load(f)
-    except Exception:
-        return None
-    if "value" in raw:
-        try:
-            return float(raw["value"])
-        except (TypeError, ValueError):
-            return None
-    tail = raw.get("tail", "")
-    best = None
-    for m in re.finditer(r'\{"metric"', tail):
-        try:
-            obj, _ = dec.raw_decode(tail, m.start())
-            if "value" in obj:
-                best = obj
-        except ValueError:
-            continue
-    return float(best["value"]) if best else None
-
-
-def _recorded_totals(max_n: int = 3) -> tuple[list, list]:
-    """(recovered, skipped) over the BENCH_r*.json artifacts, newest
-    first: ``recovered`` is up to ``max_n`` (name, total) pairs;
-    ``skipped`` names artifacts between them that yielded no total (so
-    a skipped round is recorded, never silently lost — r8 compared
-    itself to r6 because r7's truncated artifact was dropped without
-    trace)."""
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    arts = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-    recovered: list = []
-    skipped: list = []
-    for path in reversed(arts):
-        total = _total_from_artifact(path)
-        if total is None:
-            skipped.append(os.path.basename(path))
-        else:
-            recovered.append((os.path.basename(path), total))
-            if len(recovered) >= max_n:
-                break
-    return recovered, skipped
 
 
 if __name__ == "__main__":

@@ -239,7 +239,7 @@ def main() -> None:
         maintain_clusters=True,
         cluster_buckets=16,
     ).awaitTermination()
-    hp = latest_clusters(spark, f"{work}/ingest_idx_hp", partitioned=True)
+    hp = latest_clusters(spark, f"{work}/ingest_idx_hp")
     same = (
         hp.exceptAll(clusters).unionByName(clusters.exceptAll(hp)).count()
         == 0

@@ -51,9 +51,9 @@ Storage — two layouts, same merge math:
   no manifest references, and the retried batch — which reads only
   manifests with batch_id < N — deterministically overwrites them
   (dynamic partition overwrite touches only the partitions being
-  written).  Readers (``latest_clusters(..., partitioned=True)`` /
-  ``compact_clusters`` via it) resolve the newest manifest and read
-  exactly the referenced part paths.
+  written).  Readers (``latest_clusters``, and ``compact_clusters``
+  and ``lookup_components`` through it) find the manifest, resolve the
+  newest one and read exactly the referenced part paths.
 
 Scale shape at 100 TB: the cluster store and each delta are
 output-cardinality; nothing here joins the corpus against anything.
@@ -327,22 +327,20 @@ def _snapshot_before(
     )
 
 
-def latest_clusters(
-    spark: SparkSession, out_dir: str, partitioned: bool = False
-) -> DataFrame:
-    """The current (node, component) mapping — the newest full snapshot
-    (default) or the newest manifest's referenced parts
-    (``partitioned=True``).  Read while maintenance is quiescent (or
-    read a compacted copy): like the live pair stores, a snapshot
-    being written concurrently is not yet committed."""
-    if partitioned:
-        versions = _manifest_before(spark, out_dir, None)
-        cur = (
-            _read_parts(spark, out_dir, versions) if versions else None
-        )
+def latest_clusters(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The current (node, component) mapping.  The layout is read off
+    the directory: a committed ``clusters_manifest`` means the
+    partitioned store (the newest manifest's referenced parts),
+    otherwise the newest full snapshot.  Read while maintenance is
+    quiescent (or read a compacted copy): like the live pair stores, a
+    snapshot being written concurrently is not yet committed."""
+    versions = _manifest_before(spark, out_dir, None)
+    if versions is not None:
+        cur = _read_parts(spark, out_dir, versions)
         if cur is None:
             raise FileNotFoundError(
-                f"no committed cluster manifest under {out_dir}"
+                f"the newest cluster manifest under {out_dir} "
+                "references no parts"
             )
         return cur
     snaps = spark.read.parquet(f"{out_dir}/clusters")
@@ -353,11 +351,7 @@ def latest_clusters(
 
 
 def compact_clusters(
-    spark: SparkSession,
-    out_dir: str,
-    dest: str,
-    n_files: int = 1,
-    partitioned: bool = False,
+    spark: SparkSession, out_dir: str, dest: str, n_files: int = 1
 ) -> int:
     """Rewrite the CURRENT mapping as a standalone consolidated parquet
     dir (separate-dir pattern — the live store is untouched; a crash
@@ -365,7 +359,7 @@ def compact_clusters(
     Old per-batch snapshots / unreferenced part versions stay for the
     retry discipline; point readers at ``dest`` for a stable,
     single-file-set view.  Returns the row count written."""
-    cur = latest_clusters(spark, out_dir, partitioned=partitioned)
+    cur = latest_clusters(spark, out_dir)
     cur.coalesce(n_files).write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest).count()
 

@@ -134,7 +134,7 @@ def maintain_cosine_index(
     into incrementally-maintained duplicate CLUSTER ids under
     ``out_dir/clusters`` — same option as the text siblings.
     ``cluster_buckets`` selects the partitioned touched-bucket
-    snapshot layout (r11)."""
+    snapshot layout (``latest_clusters`` reads either layout)."""
     if n_planes % bands != 0:
         raise ValueError(
             f"maintain_cosine_index: n_planes={n_planes} is not divisible "

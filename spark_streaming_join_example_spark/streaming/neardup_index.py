@@ -144,8 +144,8 @@ def maintain_neardup_index(
     verified pair delta into incrementally-maintained duplicate
     CLUSTER ids under ``out_dir/clusters`` — see
     streaming/cluster_index.py.  ``cluster_buckets`` selects the
-    partitioned touched-bucket snapshot layout (r11; read back via
-    ``latest_clusters(..., partitioned=True)``)."""
+    partitioned touched-bucket snapshot layout (``latest_clusters``
+    reads either layout)."""
 
     scheme = {
         "kind": "minhash",

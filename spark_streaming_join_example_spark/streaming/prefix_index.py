@@ -93,8 +93,8 @@ def maintain_prefix_index(
     CLUSTER ids under ``out_dir/clusters`` — see
     streaming/cluster_index.py; read with
     ``cluster_index.latest_clusters``.  ``cluster_buckets`` selects the
-    partitioned touched-bucket snapshot layout (r11; read back via
-    ``latest_clusters(..., partitioned=True)``)."""
+    partitioned touched-bucket snapshot layout (``latest_clusters``
+    reads either layout)."""
     scheme = {
         "kind": "prefix",
         "order": "hash",

@@ -136,8 +136,8 @@ def maintain_simhash_index(
     into incrementally-maintained duplicate CLUSTER ids under
     ``out_dir/clusters`` (streaming/cluster_index.py) — same option as
     both Jaccard siblings.  ``cluster_buckets`` selects the
-    partitioned touched-bucket snapshot layout (r11; read back via
-    ``latest_clusters(..., partitioned=True)``)."""
+    partitioned touched-bucket snapshot layout (``latest_clusters``
+    reads either layout)."""
 
     scheme = {
         "kind": "simhash",

@@ -221,13 +221,11 @@ def test_partitioned_equals_full_rewrite_and_batch_cc(spark, tmp_path):
         seen = c if seen is None else seen.unionByName(c)
         want = _cc_set(connected_components(seen))
         assert _cc_set(latest_clusters(spark, full)) == want
-        assert (
-            _cc_set(latest_clusters(spark, part, partitioned=True)) == want
-        )
+        assert _cc_set(latest_clusters(spark, part)) == want
 
     # compaction over the partitioned store preserves the mapping
     dest = str(tmp_path / "compact")
-    n = compact_clusters(spark, part, dest, partitioned=True)
+    n = compact_clusters(spark, part, dest)
     got = {
         (r.node, r.component) for r in spark.read.parquet(dest).collect()
     }
@@ -263,7 +261,7 @@ def test_partitioned_rewrites_only_touched_buckets(spark, tmp_path):
     want = _cc_set(
         connected_components(p0.unionByName(p1))
     )
-    assert _cc_set(latest_clusters(spark, out, partitioned=True)) == want
+    assert _cc_set(latest_clusters(spark, out)) == want
 
     # rewrite volume: batch 1's new parts are much smaller than the
     # full store (the full-rewrite layout would rewrite everything)
@@ -290,24 +288,24 @@ def test_partitioned_retry_and_crash_recovery(spark, tmp_path):
 
     update_cluster_snapshot(spark, out, p1, 0, n_buckets=4)
     update_cluster_snapshot(spark, out, p2, 1, n_buckets=4)
-    want = _cc_set(latest_clusters(spark, out, partitioned=True))
+    want = _cc_set(latest_clusters(spark, out))
     assert want == {(1, 1), (2, 1), (3, 1), (4, 1), (5, 5), (6, 5)}
 
     # plain retry
     update_cluster_snapshot(spark, out, p2, 1, n_buckets=4)
-    assert _cc_set(latest_clusters(spark, out, partitioned=True)) == want
+    assert _cc_set(latest_clusters(spark, out)) == want
 
     # crash window: batch 1's manifest vanishes after its parts landed
     shutil.rmtree(f"{out}/clusters_manifest/batch_id=1")
     # readers now see batch 0's state (the commit point is the manifest)
-    assert _cc_set(latest_clusters(spark, out, partitioned=True)) == {
+    assert _cc_set(latest_clusters(spark, out)) == {
         (1, 1),
         (2, 1),
         (3, 3),
         (4, 3),
     }
     update_cluster_snapshot(spark, out, p2, 1, n_buckets=4)  # redelivery
-    assert _cc_set(latest_clusters(spark, out, partitioned=True)) == want
+    assert _cc_set(latest_clusters(spark, out)) == want
 
 
 def test_partitioned_empty_delta_carries_manifest(spark, tmp_path):
@@ -319,7 +317,7 @@ def test_partitioned_empty_delta_carries_manifest(spark, tmp_path):
     update_cluster_snapshot(spark, out, empty, 1, n_buckets=4)
     # no new parts, but batch 1 committed a manifest carrying batch 0's
     assert all(v == 0 for _, v in _parts_versions(out))
-    assert _cc_set(latest_clusters(spark, out, partitioned=True)) == {
+    assert _cc_set(latest_clusters(spark, out)) == {
         (7, 7),
         (9, 7),
     }
@@ -347,7 +345,7 @@ def test_index_cluster_buckets_passthrough(spark, tmp_path):
         maintain_clusters=True,
         cluster_buckets=8,
     ).awaitTermination()
-    got = _cc_set(latest_clusters(spark, idx, partitioned=True))
+    got = _cc_set(latest_clusters(spark, idx))
     assert got == _cc_set(
         connected_components(
             prefix_filter_jaccard_pairs(docs, threshold=0.9, shingle=3)
@@ -384,7 +382,7 @@ def test_partitioned_streaming_maintenance(spark, tmp_path):
     maintain_cluster_index(
         stream, idx, str(tmp_path / "ckpt"), n_buckets=8
     ).awaitTermination()
-    assert _cc_set(latest_clusters(spark, idx, partitioned=True)) == _cc_set(
+    assert _cc_set(latest_clusters(spark, idx)) == _cc_set(
         connected_components(pairs)
     )
 
@@ -455,3 +453,43 @@ def test_lookup_components_maps_matches_to_clusters(spark, tmp_path):
     snaps = spark.read.parquet(f"{idx}/clusters").count()
     lookup_components(spark, idx, matches).collect()
     assert spark.read.parquet(f"{idx}/clusters").count() == snaps
+
+
+def test_lookup_components_reads_partitioned_store(spark, tmp_path):
+    """lookup_components finds the layout on its own: over a store
+    written with n_buckets it returns the same rows as over the
+    full-snapshot store fed the same pair deltas."""
+    from spark_streaming_join_example_spark.streaming.cluster_index import (
+        lookup_components,
+    )
+
+    schema = "a_id long, b_id long"
+    deltas = [
+        spark.createDataFrame([(1, 2), (3, 4), (10, 11)], schema),
+        spark.createDataFrame([(2, 3), (20, 21)], schema),
+    ]
+    full = str(tmp_path / "full")
+    part = str(tmp_path / "part")
+    for i, d in enumerate(deltas):
+        update_cluster_snapshot(spark, full, d, i)
+        update_cluster_snapshot(spark, part, d, i, n_buckets=4)
+    matches = spark.createDataFrame(
+        [(100, 1), (100, 10), (101, 4), (101, 21), (102, 99), (103, 11)],
+        "q_id long, doc_id long",
+    )
+
+    def rows(out_dir):
+        return sorted(
+            tuple(r) for r in lookup_components(spark, out_dir, matches).collect()
+        )
+
+    want = [
+        (100, 1, 4),
+        (100, 10, 2),
+        (101, 1, 4),
+        (101, 20, 2),
+        (102, 99, 1),
+        (103, 10, 2),
+    ]
+    assert rows(full) == want
+    assert rows(part) == want

@@ -205,7 +205,7 @@ def test_cosine_maintain_clusters_matches_batch_cc(spark, sf_dir, tmp_path):
 
     got = {
         (r.node, r.component)
-        for r in latest_clusters(spark, idx, partitioned=True).collect()
+        for r in latest_clusters(spark, idx).collect()
     }
     want = {
         (r.node, r.component)

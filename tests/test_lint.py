@@ -141,3 +141,26 @@ def test_cited_tools_exist():
     }
     missing = sorted(f"{src}: {tool}" for src, tool in cited if not (repo / tool).exists())
     assert not missing, missing
+
+
+def test_env_switches_are_pinned():
+    """Every ``SPARK_GRAFT_*`` environment switch the engine, the bench
+    or a tool reads is on this list, so a new switch is added in plain
+    sight (and a retired one taken off) rather than left to accrete."""
+    import re
+
+    repo = TESTS.parent
+    sources = [*PKG.rglob("*.py"), *(repo / "tools").rglob("*.py"), repo / "bench.py"]
+    found = {
+        name
+        for path in sources
+        for name in re.findall(r"SPARK_GRAFT_([A-Z_]+)", path.read_text())
+    }
+    assert found == {
+        "CPUS",
+        "SHUFFLE",
+        "SF_DIR",
+        "BENCH_RUNS",
+        "HEAVY_RUNS",
+        "BENCH_STREAMING",
+    }

@@ -88,33 +88,6 @@ def test_json_file_streaming_source(spark, sf_dir, tmp_path):
     assert collect_sorted(out) == collect_sorted(be)
 
 
-def test_python_datasource_eventgen(spark):
-    """Spark 4 Python DataSource API: partition-parallel deterministic
-    generator — same rows at any partition count."""
-    from spark_streaming_join_example_spark.sources.pyds import register_eventgen
-
-    register_eventgen(spark)
-
-    def load(parts):
-        return (
-            spark.read.format("eventgen_simple")
-            .option("numRows", 1000)
-            .option("numPartitions", parts)
-            .option("seed", 7)
-            .load()
-        )
-
-    df4 = load(4)
-    assert df4.count() == 1000
-    assert df4.rdd.getNumPartitions() == 4
-    ids = [r.event_id for r in df4.select("event_id").collect()]
-    assert sorted(ids) == list(range(1000))  # full coverage, no dupes
-    # determinism across reads (same seed+parts)
-    assert collect_sorted(load(4)) == collect_sorted(load(4))
-    types = {r.event_type for r in df4.select("event_type").distinct().collect()}
-    assert types <= {"view", "click", "purchase"}
-
-
 def test_observe_metrics(spark, sf_dir):
     """observe(): accumulator-style data-quality metrics collected
     during a normal action — no second scan."""
@@ -134,47 +107,6 @@ def test_observe_metrics(spark, sf_dir):
     assert m["n_rows"] == li.count()       # metrics saw ALL rows pre-filter
     assert 0 < kept < m["n_rows"]
     assert m["n_big_disc"] >= 0 and m["max_ship"] is not None
-
-
-def test_python_datasource_streaming(spark, tmp_path):
-    """Spark 4 streaming Python DataSource: micro-batches advance by
-    offset; rows are deterministic per offset (replayable)."""
-    import time
-
-    import pyspark.sql.functions as F
-
-    from spark_streaming_join_example_spark.sources.pyds import register_eventgen
-
-    register_eventgen(spark)
-    stream = (
-        spark.readStream.format("eventgen_simple")
-        .option("rowsPerBatch", 50)
-        .option("seed", 7)
-        .load()
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("pyds_stream")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    try:
-        deadline = time.time() + 60
-        n = 0
-        while time.time() < deadline:
-            n = spark.table("pyds_stream").count()
-            if n >= 150:
-                break
-            time.sleep(1)
-        assert n >= 150
-        got = spark.table("pyds_stream")
-        # offsets are row ids: contiguous from 0, no dupes
-        ids = [r.event_id for r in got.select("event_id").collect()]
-        assert sorted(ids) == list(range(len(ids)))
-        assert got.filter(F.col("value") < 0).count() == 0
-    finally:
-        q.stop()
 
 
 def test_rocksdb_state_store_provider(spark, sf_dir, tmp_path):
@@ -379,8 +311,8 @@ def test_python_datasource_batch(spark):
     )
     assert df.rdd.getNumPartitions() == 7
     rows = df.collect()
-    assert len(rows) == 1000
-    assert len({r.event_id for r in rows}) == 1000
+    # ids cover the range exactly: no gaps, no duplicates
+    assert sorted(r.event_id for r in rows) == list(range(1000))
     assert {r.event_type for r in rows} <= {
         "view", "click", "purchase", "signup", "error"
     }
